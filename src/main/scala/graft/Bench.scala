@@ -1,81 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the bench-flagged headline queries (BDB-analog
   * set — scan-agg, star join, top-k, window, dedup, ANN) at
   * SPARK_GRAFT_SF_DIR and prints JSON for the driver.
   *
   * Protocol mirrors the reference's trial policy (README.md:75-80: first
-  * trial discarded as warm-up): one warm-up pass, then — r19 — THREE
-  * timed trials per query minimum, extended (cap 5) while the sequence
-  * is still monotonically descending at the last trial, best-of-trials
-  * reported (median when the curve RISES >1.5× — see timedTrials).
-  * Results are fully materialized through the noop sink so projection
-  * work isn't pruned away by a count().
+  * trial discarded as warm-up): one warm-up pass, then at least three
+  * timed trials per query (see timedTrials). Results are fully
+  * materialized through the noop sink so projection work isn't pruned
+  * away by a count().
   *
   * Output carries the full `total` plus `core8`, the sum over the fixed
   * 8-query set benched since round 4, so round-over-round comparisons
   * survive additions to the bench list.
   *
-  * OUTPUT SHAPE (r15 postmortem: the bench_3x fields grew the single
-  * metric line past the driver's stdout tail-capture window, truncating
-  * its head — BENCH_r15.json shipped `parsed: null`): the artifact is now
-  * TWO JSON lines. A `{"detail":"bench",…}` line carries the bulky
-  * self-diagnosis payload (per-trial times, cache attribution,
-  * containment diag, the full bench_3x section) and is printed FIRST; the
-  * compact `{"metric":"total",…}` summary is printed LAST, after
-  * spark.stop(), so the driver's tail capture always sees a complete
-  * summary line no matter how the detail payload grows. The legacy out
-  * files (bench.json etc.) keep their one-line shape with the compact
-  * summary only; the detail line additionally lands in bench_detail.json.
+  * OUTPUT SHAPE: two JSON lines. A `{"detail":"bench",…}` line carries
+  * the bulky self-diagnosis payload (per-trial times, per-trial GC, cache
+  * attribution, containment diag, the full bench_3x section, and every
+  * swallowed failure under `errors`) and is printed FIRST; the compact
+  * `{"metric":"total",…}` summary is printed LAST, after spark.stop(), so
+  * a tail capture always sees a complete summary line. The out files
+  * (bench.json etc.) hold the compact summary only; the detail line
+  * lands in bench_detail.json.
   *
-  * SELF-DIAGNOSING artifact (r7 postmortem: a driver run landed 2-3×
-  * slower than two controlled runs of identical code, and only an
-  * out-of-band re-run could adjudicate): the JSON carries
-  * (a) `trials` — EVERY trial timing per query, not just the best, so
-  * uniform inflation across trials (machine load) is distinguishable
-  * from one noisy draw (GC); and (b) `calib_pre` / `calib_post` — a
-  * fixed pure-CPU xorshift loop timed in this same JVM before the
-  * warm-ups and after the last trial. The loop's cost is
-  * machine-invariant at fixed clock (≈0.284 s on the round-8 build
-  * machine, pre/post agreeing to 3 digits on a quiet run); a calib
-  * reading inflated vs other rounds means the HOST was loaded and the
-  * row times should be discounted by the same factor. Pre+post
-  * brackets contention that arrives mid-run.
-  *
-  * r17 (verdict #3): each bracket reading is now a PAIR — the 1-thread
-  * probe plus an 8-thread parallel probe of the same loop
-  * (`calib_par_pre`/`calib_par_post`). The quiet gate and the re-measure
-  * decision key off the PARALLEL pair, and the summary carries
-  * `queries_norm` = per-row wall / mean parallel calibration, so a
-  * cross-round comparison can separate "the code regressed" from "the
-  * evening host was loaded" without an out-of-band re-run.
-  *
-  * r19 (verdict #1 — the r18 driver artifact read +48% with quiet=true
-  * and its own calibration explaining only ~9%; the inflated rows were
-  * shuffle/memory-bound, a load class a register-only spin probe cannot
-  * feel): each bracket is now a TRIPLE — serial spin, 8-thread spin,
-  * and a SHUFFLE-SHAPED probe (fixed groupBy-sum over a pre-cached
-  * table, `calib_shuf_pre`/`calib_shuf_post`); the quiet gate judges
-  * the parallel pair (10%) OR the shuffle pair (20%). The main pass
-  * also carries its per-trial GC column (`gc_ms` on the detail line —
-  * previously computed and discarded exactly where the r18
-  * adjudication needed it), and the trial policy gained a 3-trial
-  * floor + descending-curve extension (see timedTrials).
-  *
-  * r20 (verdict #1 — the r19 driver run flagged dedup_containment at
-  * 8.86× in the 3× sweep while its own bracket read quiet; a burst
-  * localized to ONE row's window is invisible to sweep-level probes):
-  * per-row adjudication. (a) A 3× row landing over the 4.5× threshold
-  * is re-measured once in a fresh window before the over/env lists are
-  * written (`bench_3x_remeasured` names the rows); (b) any row whose
-  * within-row trial spread exceeds 2× gets an ADJACENT shuffle-probe
-  * reading (`row_shuf` / `bench_3x_row_shuf`), so per-row
-  * over-vs-env_suspect is decidable from the JSON; (c) the summary
-  * carries `queries_norm_shuf`, a twin normalized column keyed off the
-  * shuffle probe — the load class that actually moves these rows —
-  * alongside the spin-keyed `queries_norm`.
+  * SELF-DIAGNOSING: each measured pass sits in a calibration bracket —
+  * a serial xorshift spin, the same spin on 8 threads, and a
+  * shuffle-shaped probe, read before and after. When the bracket drifts
+  * the pass is measured once more and the quieter attempt is reported
+  * (`quiet`, `attempts`); `queries_norm` / `queries_norm_shuf` divide
+  * each row by the parallel / shuffle probe so host load and code
+  * regressions can be told apart from one artifact. BENCHNOTES.md has
+  * the history behind each probe and threshold.
   */
 object Bench {
 
@@ -155,29 +110,22 @@ object Bench {
   val constInput3x: Set[String] = Set("graph_pagerank")
 
   /** Shared per-row trial policy (main pass and 3× pass use the SAME
-    * rules, so their numbers are comparable). r19 (verdict #1b — the
-    * r18 artifact's containment read 3.72→2.40→2.02 with min NOT yet
-    * converged, and text_tfidf got only 2 trials, both elevated):
-    *   - FLOOR of 3 trials for every row (was best-of-2 + conditional
-    *     third) — the whole 12-row set costs ~5 s extra;
+    * rules, so their numbers are comparable):
+    *   - a FLOOR of 3 trials for every row;
     *   - CONVERGENCE extension: while the trial sequence is still
     *     monotonically DESCENDING at the last trial (each step strictly
     *     down AND the last step still >3% — a still-warming row), add
     *     another trial, capped at 5 total, so "min of trials" means a
     *     CONVERGED min rather than wherever the budget ran out;
-    *   - the r13 RISING-curve diagnostic stays: a row whose trials RISE
-    *     >1.5× first→last reports the MEDIAN of its trials instead of
-    *     the min (min-of-trials assumes later trials are never
-    *     systematically slower; q1_agg's 0.39→0.70→0.81 curve in
-    *     BENCH_r13 showed in-run degradation that biases min toward one
-    *     lucky first draw).
-    * Returns (reported, trials, rising, perTrialGcMs); (-1, empty,
-    * false, empty) when every trial threw. ANY trial that fails
-    * transiently must not discard the valid timings — r20 (r19 ADVICE):
-    * the three floor trials now run under the same per-trial protection
-    * as the extension trials (previously a throw on trial 2 or 3
-    * discarded trial 1's valid timing and reported the -1 sentinel). */
-  private def timedTrials(run: () => Double): (Double, Seq[Double], Boolean, Seq[Long]) = {
+    *   - RISING curve: a row whose trials RISE >1.5× first→last reports
+    *     the MEDIAN of its trials instead of the min (min-of-trials
+    *     assumes later trials are never systematically slower).
+    * Every trial runs under its own protection, so one that throws
+    * (reported to `onError`) never discards the valid timings. Returns
+    * (reported, trials, rising, perTrialGcMs); (-1, empty, false, empty)
+    * when every trial threw. */
+  private def timedTrials(run: () => Double, onError: Throwable => Unit)
+      : (Double, Seq[Double], Boolean, Seq[Long]) = {
     val gs = scala.collection.mutable.ArrayBuffer.empty[Long]
     val ts = scala.collection.mutable.ArrayBuffer.empty[Double]
     def timed(): Boolean =
@@ -187,7 +135,7 @@ object Bench {
         gs += gcMs() - g0
         ts += t
         true
-      } catch { case _: Throwable => false }
+      } catch { case e: Throwable => onError(e); false }
     (1 to 3).foreach(_ => timed())
     if (ts.isEmpty) (-1.0, Seq.empty, false, Seq.empty)
     else {
@@ -208,48 +156,60 @@ object Bench {
     }
   }
 
+  /** One row of a measured pass. `rowShuf` is a shuffle-probe reading
+    * taken IMMEDIATELY after the row's trials when their spread exceeds
+    * 2× (max > 2×min), -1 otherwise: an elevated adjacent probe names a
+    * load burst local to this row's window, a flat one leaves the row
+    * owning its spread. */
+  private case class Row(name: String, reported: Double, trials: Seq[Double],
+      gcMs: Seq[Long], cache: String, rising: Boolean, rowShuf: Double)
+
+  /** One calibration reading: serial spin, 8-thread spin and shuffle
+    * probe, best-of-3 each. */
+  private case class Calib(serial: Double, par: Double, shuf: Double)
+
+  /** A measured pass: its calibration bracket, its rows, and how many
+    * attempts it took. The host counts as LOADED when the bracket's
+    * parallel probe drifts >10% or its shuffle probe >20% (a real
+    * shuffle has more draw variance than a spin loop). */
+  private case class Pass(pre: Calib, post: Calib, rows: Seq[Row], attempts: Int) {
+    private def drift(a: Double, b: Double, tol: Double): Boolean =
+      math.abs(b - a) > tol * math.min(a, b)
+    def quiet: Boolean = !drift(pre.par, post.par, 0.10) && !drift(pre.shuf, post.shuf, 0.20)
+    def parDrift: Double = math.abs(post.par - pre.par)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.withHive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench", Engine.localMaster)
+
+    // Every failure a measurement survives is recorded here (row or
+    // section name → where, exception class, message) and lands under
+    // `errors` on the detail line: a row that throws must read as a
+    // failure, not as a fast row.
+    val errors = scala.collection.mutable.LinkedHashMap
+      .empty[String, scala.collection.mutable.ArrayBuffer[String]]
+    def record(key: String, at: String)(e: Throwable): Unit =
+      errors.getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer.empty) +=
+        s"""{"at":"$at","class":${Verify.jsonString(e.getClass.getName)},""" +
+          s""""message":${Verify.jsonString(String.valueOf(e.getMessage).take(1000))}}"""
 
     def runOnce(q: queries.Q, dir: String = sfDir): Double = {
       val t0 = System.nanoTime()
       q.fn(spark, dir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
+    def warmUp(q: queries.Q, dir: String, at: String): Unit =
+      try { runOnce(q, dir); () } catch { case e: Throwable => record(q.name, at)(e) }
 
-    // r19 (verdict #1c): a SHUFFLE-SHAPED calibration probe next to the
-    // CPU spin pair — a fixed groupBy-sum over a pre-cached synthetic
-    // table (4M rows, 100k groups, 8 partitions), best-of-3. The r18
-    // miss was precisely a load class the spin pair cannot feel: the
-    // rows that blew up (text_tfidf 2.8×, sim_topk_pq 1.7×) are
-    // shuffle/memory-bound, and an 8-thread register-only spin reads
-    // quiet under memory-bandwidth/GC pressure because it never touches
-    // the heap. This probe allocates, hashes, shuffles, and GCs the way
-    // a query stage does, so its pre/post drift moves with exactly the
-    // pressure the rows feel. The input is cached AND materialized once
-    // before any timed window, so the probe never measures its own
-    // build. Quiet gate: the parallel pair keeps its 10% threshold; the
-    // shuffle pair gets 20% (a real shuffle has more inherent draw
-    // variance than a spin loop — threshold sized from measured quiet
-    // spreads, see BENCHNOTES round 19).
-    // r20 (r19 ADVICE): the probe input is cached only WHILE a reading
-    // is taken and unpersisted (blocking) right after — r19 held the
-    // ~64 MB probe table in storage memory across BOTH measured passes,
-    // a standing footprint that could contend with CacheOnce eviction
-    // and subtly shift row timings vs pre-r19 rounds. The re-cache per
-    // reading happens OUTSIDE the timed window (materialized via noop
-    // before the first timed draw), so the probe still never measures
-    // its own build.
+    // The shuffle-shaped calibration probe: a fixed groupBy-sum over a
+    // cached synthetic table (4M rows, 100k groups, 8 partitions),
+    // best-of-3. It allocates, hashes, shuffles and GCs the way a query
+    // stage does, so it feels the memory-bandwidth/GC load that moves
+    // the shuffle-bound rows and that a register-only spin cannot. The
+    // input is cached only while a reading is taken and materialized
+    // before the first timed draw, so the probe never measures its own
+    // build and holds no storage memory across the measured passes.
     val shufProbe: () => Double = {
       import org.apache.spark.sql.functions._
       val df = spark.range(0L, 4000000L, 1L, 8)
@@ -275,14 +235,13 @@ object Bench {
     }
 
     val qs = SparkEntry.benchQueries
-    qs.foreach { q => try runOnce(q) catch { case _: Throwable => () } } // warm-up
+    qs.foreach(warmUp(_, sfDir, "warmup"))
 
-    // One full measurement pass bracketed by calibration readings.
-    // Each row also carries its CacheOnce attribution (r11 verdict #4):
-    // which shared signature tables the trials touched, whether the swap
-    // was a reuse, and the keys' block-manager state BEFORE the trials —
-    // so a 0.4-vs-1.6 s spread on cache-sharing rows (text_tf feeds both
-    // text_tfidf and text_bm25_topk) is decidable from the artifact.
+    // Each row also carries its CacheOnce attribution: which shared
+    // signature tables the trials touched, whether the swap was a
+    // reuse, and the keys' block-manager state BEFORE the trials — so a
+    // spread on cache-sharing rows (text_tf feeds both text_tfidf and
+    // text_bm25_topk) is decidable from the artifact.
     def cacheAttribution(
         preSnap: Map[String, (Double, Long, Long)],
         ev: Seq[(String, Boolean)]): String =
@@ -304,109 +263,55 @@ object Bench {
         s"""{"cache_hit":$hit,"swap_miss":$swapMiss,"keys":{$keys}}"""
       }
 
-    // (serial best-of-3, parallel-8 best-of-3, shuffle best-of-3)
-    // bracket reading — the r19 triple
-    def calibPair(): (Double, Double, Double) =
-      (calibrate(), calibrateParallel(), shufProbe())
-
-    // Per-row measurement record shared by the main and 3× passes:
-    // (name, reported, trials, perTrialGc, cacheAttribution, rising,
-    // rowShuf). rowShuf (r20 verdict #1b) is a shuffle-probe reading
-    // taken IMMEDIATELY after the row's trials when the within-row
-    // spread exceeds 2× (max > 2×min) — the r19 driver's containment
-    // trials read 14.45/26.40/12.74 (a 2.1× spread) and nothing
-    // ADJACENT in the artifact could say whether the 26.4 was a load
-    // burst; an elevated adjacent probe names a burst localized to this
-    // row's window while a flat one leaves the row owning its spread.
-    // -1.0 = spread under threshold, no probe taken.
-    type Row = (String, Double, Seq[Double], Seq[Long], String, Boolean, Double)
-    def timeRow(q: queries.Q, dir: String): Row = {
+    def timeRow(q: queries.Q, dir: String, at: String): Row = {
       val preSnap = functions.CacheOnce.storageSnapshot()
       functions.CacheOnce.drainEvents(): Unit
-      val (t, trials, rising, gcs) = timedTrials(() => runOnce(q, dir))
+      val (t, trials, rising, gcs) = timedTrials(() => runOnce(q, dir), record(q.name, at))
       val cache = cacheAttribution(preSnap, functions.CacheOnce.drainEvents())
       val rowShuf =
         if (trials.nonEmpty && trials.max > 2.0 * trials.min) shufProbe() else -1.0
-      (q.name, t, trials, gcs, cache, rising, rowShuf)
+      Row(q.name, t, trials, gcs, cache, rising, rowShuf)
     }
 
-    // r19 (verdict #1a): the main pass now CARRIES its per-trial GC
-    // deltas into the artifact — the r18 postmortem found the
-    // exculpatory column computed and discarded exactly where it was
-    // needed (the 3× bracket kept bench_3x_gc_ms; the main pass dropped
-    // gcs at the row-tuple construction below)
-    def measure(): ((Double, Double, Double), (Double, Double, Double), Seq[Row]) = {
-      val pre = calibPair()
-      val rs = qs.map(timeRow(_, sfDir))
-      (pre, calibPair(), rs)
+    def calib(): Calib = Calib(calibrate(), calibrateParallel(), shufProbe())
+
+    // QUIETNESS GATE, shared by the main and 3× passes: measure `rows`
+    // inside a calibration bracket; if the bracket reads loaded,
+    // measure ONCE more and report the quieter attempt (the second,
+    // unless it is loaded too and drifted more on the parallel probe).
+    def bracketed(rows: () => Seq[Row]): Pass = {
+      def attempt(): Pass = {
+        val pre = calib()
+        val rs = rows()
+        Pass(pre, calib(), rs, 1)
+      }
+      val first = attempt()
+      if (first.quiet) first
+      else {
+        val second = attempt()
+        (if (!second.quiet && first.parDrift <= second.parDrift) first else second)
+          .copy(attempts = 2)
+      }
     }
 
-    // QUIETNESS GATE (r10 postmortem: the driver artifact shipped a
-    // load-contaminated reading — calib_post 24% over calib_pre with
-    // monotonically ascending trials — while quiet runs of identical
-    // code existed the same day). If pre/post calibration disagree by
-    // >10% the host was loaded mid-run: re-measure ONCE, then report
-    // whichever attempt is quieter and self-certify via "quiet".
-    // r17 (verdict #3): the gate judges the PARALLEL probe — the r16
-    // closing band proved a 1-thread spin under-reports multi-core
-    // scheduler contention (calib +6% while wall inflated up to 55%),
-    // so a serial-keyed gate certifies "quiet" through exactly the load
-    // that moves the row times.
-    def loaded(pre: Double, post: Double): Boolean =
-      math.abs(post - pre) > 0.10 * math.min(pre, post)
-    // r19 (verdict #1c): the gate now ALSO judges the shuffle probe (at
-    // a wider 20% threshold — a real shuffle has more draw variance
-    // than a spin loop). The r18 driver run certified itself quiet on
-    // the spin pair while shuffle/memory-bound rows inflated 1.7-2.8×;
-    // a memory/GC-pressured host moves the shuffle probe even when the
-    // spin pair stays flat.
-    def loadedShuf(pre: Double, post: Double): Boolean =
-      math.abs(post - pre) > 0.20 * math.min(pre, post)
-    def loadedPair(pre: (Double, Double, Double), post: (Double, Double, Double)): Boolean =
-      loaded(pre._2, post._2) || loadedShuf(pre._3, post._3)
-    val first = measure()
-    val (calPre, calPost, results, attempts) =
-      if (loadedPair(first._1, first._2)) {
-        val second = measure()
-        val pick = if (loadedPair(second._1, second._2) &&
-          math.abs(first._2._2 - first._1._2) <= math.abs(second._2._2 - second._1._2)) first
-        else second
-        (pick._1, pick._2, pick._3, 2)
-      } else (first._1, first._2, first._3, 1)
-    val (calibPre, calibParPre, calibShufPre) = calPre
-    val (calibPost, calibParPost, calibShufPost) = calPost
-    val quiet = !loadedPair(calPre, calPost)
+    val pass = bracketed(() => qs.map(timeRow(_, sfDir, "trial")))
+    val results = pass.rows
 
-    // bench_3x (r14 verdict #5): the three-point fences check LOGICAL
-    // volumes; constant-factor scale-killers (a stage whose parallelism
-    // doesn't grow, driver-side planning blowup) only show in seconds.
-    // Run every bench row against the derived 3× corpus (one warm-up +
-    // best-of-2 timed passes — the 3× plans are cold in this JVM, and an
-    // unwarmed reading would measure codegen compilation AND the
-    // CacheOnce swap to the 3× keys, not scaling) and report the wall
-    // ratio vs the row's reported sf0.1 time. Rows over 4.5× (3× data ×
-    // log-factor headroom) are named in "bench_3x_over" for BENCHNOTES
-    // root-causing — reported, not crashed, so one noisy draw cannot
-    // kill the whole artifact.
-    //
-    // r16 (r15 postmortem: the driver's run flagged containment 6.96× /
-    // pagerank 5.39× against the builder's own ≤3.08× closing runs, with
-    // nothing in the artifact to adjudicate): the 3× pass now gets the
-    // SAME measurement hygiene as the main pass —
-    //   (a) its own calibration bracket + re-measure-once-if-loaded +
-    //       "bench_3x_quiet" self-certification (the main pass's bracket
-    //       ended at calib_post, leaving bench_3x entirely unbracketed —
-    //       load arriving late in the driver's run was invisible);
-    //   (b) the shared timedTrials policy (third-trial-when-noisy,
-    //       rising→median) instead of a bare best-of-2;
-    //   (c) per-trial times AND per-trial driver-GC deltas in the detail
-    //       artifact, so GC-debt inflation is decidable from the JSON;
-    //   (d) CacheOnce attribution per row, so a timed window that paid a
-    //       3×-key swap/build (warm-up is supposed to absorb it) is
-    //       visible as cache_hit:false;
-    //   (e) an explicit System.gc() before the pass, so the 3× readings
-    //       don't start by collecting the main pass's accumulated
-    //       garbage inside some row's timed window.
+    // {"row":value,…} over the rows f gives a value for; ["row",…]
+    def jsonMap(rows: Seq[Row])(f: Row => Option[String]): String =
+      rows.flatMap(r => f(r).map("\"" + r.name + "\":" + _)).mkString("{", ",", "}")
+    def jsonNames(rows: Seq[Row]): String = rows.map("\"" + _.name + "\"").mkString("[", ",", "]")
+
+    // bench_3x: the three-point fences check LOGICAL volumes;
+    // constant-factor scale-killers (a stage whose parallelism doesn't
+    // grow, driver-side planning blowup) only show in seconds. Every
+    // bench row runs against the derived 3× corpus under the same
+    // hygiene as the main pass (warm-up, shared trial policy, per-trial
+    // GC, CacheOnce attribution, calibration bracket and re-measure),
+    // after an explicit System.gc() so the 3× readings don't start by
+    // collecting the main pass's garbage inside some row's window. The
+    // wall ratio vs the row's sf0.1 time is reported; rows over the
+    // threshold are named in "bench_3x_over" — reported, not crashed.
     // Emitted only for the standard sf0.1 run; SPARK_GRAFT_BENCH_3X=0
     // skips (dev iteration).
     def bench3x(): (String, String) = try {
@@ -414,93 +319,61 @@ object Bench {
         sys.env.get("SPARK_GRAFT_BENCH_3X").contains("0")) ("", "")
       else {
         val dir3 = ScaleFixture.dir(spark, sfDir)
-        val base = results.collect { case (k, v, _, _, _, _, _) if v > 0 => k -> v }.toMap
+        val base = results.collect { case r if r.reported > 0 => r.name -> r.reported }.toMap
         System.gc()
-        def measure3(): ((Double, Double, Double), (Double, Double, Double), Seq[Row]) = {
-          val pre = calibPair()
-          val rows = qs.map { q =>
-            try { runOnce(q, dir3) } catch { case _: Throwable => () } // warm-up
-            timeRow(q, dir3)
-          }
-          (pre, calibPair(), rows)
+        def row3(q: queries.Q): Row = {
+          warmUp(q, dir3, "warmup_3x")
+          timeRow(q, dir3, "trial_3x")
         }
-        val f1 = measure3()
-        val (cal3Pre, cal3Post, rows0, attempts3) =
-          if (loadedPair(f1._1, f1._2)) {
-            val f2 = measure3()
-            val pick = if (loadedPair(f2._1, f2._2) &&
-              math.abs(f1._2._2 - f1._1._2) <= math.abs(f2._2._2 - f2._1._2)) f1
-            else f2
-            (pick._1, pick._2, pick._3, 2)
-          } else (f1._1, f1._2, f1._3, 1)
-        val (pre3, par3Pre, shuf3Pre) = cal3Pre
-        val (post3, par3Post, shuf3Post) = cal3Post
-        val quiet3 = !loadedPair(cal3Pre, cal3Post)
-        // r20 (verdict #1a): PER-ROW adjudication before the over/env
-        // lists are written — a row landing over the 4.5× threshold is
-        // re-measured ONCE (fresh warm-up + trials + its own adjacent
-        // probe, in a NEW time window). The whole-sweep bracket (one
-        // calibPair before, one after the 12-row sweep) cannot see a
-        // load burst localized to one row's window: the r19 driver run
-        // flagged dedup_containment at 8.86× with bench_3x_quiet=true
-        // while five same-day builder runs on the identical tree read
-        // ≤2.35×. The quieter attempt is reported; re-measured rows are
-        // named in "bench_3x_remeasured", so a row that stays over
-        // after TWO independent windows is a real scaling signal, not
-        // one noisy draw.
+        val pass3 = bracketed(() => qs.map(row3))
+        // PER-ROW adjudication before the over/env lists are written: a
+        // row over the threshold is re-measured ONCE in a new time
+        // window (a load burst localized to one row's window is
+        // invisible to the sweep bracket). The quieter attempt is
+        // reported; re-measured rows are named in
+        // "bench_3x_remeasured", so a row that stays over after TWO
+        // independent windows is a real scaling signal.
         // threshold 4.5 = 3× data × log-factor headroom;
         // SPARK_GRAFT_BENCH_3X_THRESH overrides it so the adjudication
         // path itself is TESTABLE (set it below 1 and every row must
-        // appear in bench_3x_remeasured with a second fresh window —
-        // proven firing, not just written; BENCHNOTES round 20)
+        // appear in bench_3x_remeasured with a second fresh window)
         val overThresh = sys.env.get("SPARK_GRAFT_BENCH_3X_THRESH")
           .flatMap(_.toDoubleOption).getOrElse(4.5)
-        def isOver(k: String, t: Double): Boolean =
-          t >= 0 && base.get(k).exists(b => t / b > overThresh)
+        def isOver(r: Row): Boolean =
+          r.reported >= 0 && base.get(r.name).exists(b => r.reported / b > overThresh)
         val remeasured = scala.collection.mutable.ArrayBuffer.empty[String]
-        val rows = rows0.map { case row @ (k, t, _, _, _, _, _) =>
-          if (!isOver(k, t)) row
-          else qs.find(_.name == k).fold(row) { q =>
-            remeasured += k
-            try { runOnce(q, dir3) } catch { case _: Throwable => () } // warm-up
-            val second = timeRow(q, dir3)
-            if (second._2 >= 0 && second._2 < t) second else row
+        val rows = pass3.rows.map { row =>
+          if (!isOver(row)) row
+          else qs.find(_.name == row.name).fold(row) { q =>
+            remeasured += row.name
+            val second = row3(q)
+            if (second.reported >= 0 && second.reported < row.reported) second else row
           }
         }
-        def jmap(f: Row => Option[String]): String =
-          rows.flatMap(f(_)).mkString("{", ",", "}")
-        val times = jmap { case (k, t, _, _, _, _, _) => Some("\"" + k + "\":" + t) }
-        val ratios = jmap { case (k, t, _, _, _, _, _) =>
-          base.get(k).collect { case b if t >= 0 =>
-            "\"" + k + "\":" + math.rint(t / b * 100) / 100 } }
-        val trials3 = jmap { case (k, _, ts, _, _, _, _) =>
-          Some("\"" + k + "\":" + ts.mkString("[", ",", "]")) }
-        val gc3 = jmap { case (k, _, _, gs, _, _, _) =>
-          Some("\"" + k + "\":" + gs.mkString("[", ",", "]")) }
-        val cache3 = jmap { case (k, _, _, _, c, _, _) =>
-          if (c.nonEmpty) Some("\"" + k + "\":" + c) else None }
-        val rising3 = rows.collect { case (k, _, _, _, _, r, _) if r => "\"" + k + "\"" }
-          .mkString("[", ",", "]")
-        // adjacent per-row probe readings (r20 verdict #1b) — only rows
-        // whose trial spread exceeded 2× carry one
-        val rowShuf3 = jmap { case (k, _, _, _, _, _, rs) =>
-          if (rs >= 0) Some("\"" + k + "\":" + rs) else None }
+        val jmap = jsonMap(rows) _
+        val times = jmap(r => Some(r.reported.toString))
+        val ratios = jmap(r => base.get(r.name).collect {
+          case b if r.reported >= 0 => (math.rint(r.reported / b * 100) / 100).toString })
+        val trials3 = jmap(r => Some(r.trials.mkString("[", ",", "]")))
+        val gc3 = jmap(r => Some(r.gcMs.mkString("[", ",", "]")))
+        val cache3 = jmap(r => Some(r.cache).filter(_.nonEmpty))
+        val rising3 = jsonNames(rows.filter(_.rising))
+        val rowShuf3 = jmap(r => Some(r.rowShuf).filter(_ >= 0).map(_.toString))
         val remeasuredJson = remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
-        def flagged(const: Boolean): String = rows.collect {
-          case (k, t, _, _, _, _, _)
-              if constInput3x(k) == const && isOver(k, t) => "\"" + k + "\""
-        }.mkString("[", ",", "]")
+        def flagged(const: Boolean): String =
+          jsonNames(rows.filter(r => constInput3x(r.name) == const && isOver(r)))
         val over = flagged(const = false)
         val env = flagged(const = true)
+        val quiet3 = pass3.quiet
         val detail =
           s""""bench_3x":$times,"bench_3x_ratio":$ratios,""" +
           s""""bench_3x_trials":$trials3,"bench_3x_gc_ms":$gc3,""" +
           s""""bench_3x_cache":$cache3,"bench_3x_rising":$rising3,""" +
           s""""bench_3x_row_shuf":$rowShuf3,"bench_3x_remeasured":$remeasuredJson,""" +
-          s""""bench_3x_calib_pre":$pre3,"bench_3x_calib_post":$post3,""" +
-          s""""bench_3x_calib_par_pre":$par3Pre,"bench_3x_calib_par_post":$par3Post,""" +
-          s""""bench_3x_calib_shuf_pre":$shuf3Pre,"bench_3x_calib_shuf_post":$shuf3Post,""" +
-          s""""bench_3x_quiet":$quiet3,"bench_3x_attempts":$attempts3,""" +
+          s""""bench_3x_calib_pre":${pass3.pre.serial},"bench_3x_calib_post":${pass3.post.serial},""" +
+          s""""bench_3x_calib_par_pre":${pass3.pre.par},"bench_3x_calib_par_post":${pass3.post.par},""" +
+          s""""bench_3x_calib_shuf_pre":${pass3.pre.shuf},"bench_3x_calib_shuf_post":${pass3.post.shuf},""" +
+          s""""bench_3x_quiet":$quiet3,"bench_3x_attempts":${pass3.attempts},""" +
           s""""bench_3x_over":$over,"bench_3x_env_suspect":$env,"""
         // the compact summary carries only the graded signals
         val summary =
@@ -508,20 +381,19 @@ object Bench {
           s""""bench_3x_quiet":$quiet3,"bench_3x_remeasured":$remeasuredJson,"""
         (detail, summary)
       }
-    } catch { case _: Throwable => ("", "") }
+    } catch { case e: Throwable => record("bench_3x", "bench_3x")(e); ("", "") }
 
-    // dedup_containment variance diagnostics (r10 task 5): its 1.5-4.4 s
-    // trial spread is draw-dependent; emitting the candidate-pair count
-    // (largest equi-join output) and the verify-stage input rows
-    // (topmost equi-join output — the pairs the graft_overlap64 verify
-    // actually scores) makes draw-variance vs code-regression decidable
-    // from the artifact alone.
+    // dedup_containment variance diagnostics: emitting the
+    // candidate-pair count (largest equi-join output) and the
+    // verify-stage input rows (topmost equi-join output — the pairs the
+    // graft_overlap64 verify actually scores) makes draw-variance vs
+    // code-regression decidable from the artifact alone.
     def containmentDiag(): String = try {
       import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
       val df = SparkEntry.queries("dedup_containment")(spark, sfDir)
       // collect() (not a noop write) so execution flows through THIS
       // DataFrame's QueryExecution — a write plans its own, leaving
-      // df.queryExecution's metrics at zero (the r11 bug)
+      // df.queryExecution's metrics at zero
       df.collect()
       val joinRows = plans.PlanWalk.nodes(df.queryExecution.executedPlan).collect {
         case j: SortMergeJoinExec => j.metrics.get("numOutputRows")
@@ -531,86 +403,65 @@ object Bench {
       val candidates = joinRows.foldLeft(0L)(math.max)
       val verifyRows = joinRows.headOption.getOrElse(0L) // pre-order: topmost join
       s""""containment_diag":{"candidates":$candidates,"verify_rows":$verifyRows},"""
-    } catch { case _: Throwable => "" }
+    } catch { case e: Throwable => record("containment_diag", "containment_diag")(e); "" }
     val diag = containmentDiag()
     val (diag3xDetail, diag3xSummary) = bench3x()
-    val qsJson = results.map { case (k, v, _, _, _, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // per-row wall normalized by the parallel-8 calibration bracket mean
-    // (r16 verdict #3): "regressed or noisy?" becomes answerable from one
-    // artifact — a row whose WALL rose but whose NORM is flat moved with
-    // the host, not the code. Unit: multiples of the 8-thread probe.
-    val calibPar = (calibParPre + calibParPost) / 2.0
-    // key-aligned with the queries map (r17 ADVICE): a failed row's
-    // negative sentinel (and a degenerate 0) passes through un-normalized
-    // instead of silently disappearing, so cross-round comparers joining
-    // the two maps see symmetric key sets.
-    val qsNormJson = results.map { case (k, v, _, _, _, _, _) =>
-      "\"" + k + "\":" + (if (v > 0) math.rint(v / calibPar * 1000) / 1000 else v) }
-      .mkString("{", ",", "}")
-    // r20 (verdict #1c): a TWIN normalized column keyed off the SHUFFLE
-    // probe's bracket mean. r18 and r19 both proved the load class that
-    // actually moves these rows is the one a register-only spin cannot
-    // feel — the r19 spin-normalized column asserted "code moved" for
-    // sim_topk_pq (norm 6.553, flat spin pair) on the very run whose
-    // shuffle probe tripped 2.8× and whose own 3× bracket exonerated
-    // the row (0.44 s on 3× the data). Cross-round comparers should
-    // prefer THIS column for shuffle/memory-bound rows; the spin twin
-    // stays for clock-drift separation. Unit: multiples of the shuffle
-    // probe reading.
-    val calibShuf = (calibShufPre + calibShufPost) / 2.0
-    val qsNormShufJson = results.map { case (k, v, _, _, _, _, _) =>
-      "\"" + k + "\":" + (if (v > 0 && calibShuf > 0) math.rint(v / calibShuf * 1000) / 1000 else v) }
-      .mkString("{", ",", "}")
-    val trialsJson = results
-      .map { case (k, _, ts, _, _, _, _) => "\"" + k + "\":" + ts.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    // per-trial driver-GC deltas, same shape as bench_3x_gc_ms (r19
-    // verdict #1a — the main pass used to compute and DISCARD these)
-    val gcJson = results
-      .map { case (k, _, _, gs, _, _, _) => "\"" + k + "\":" + gs.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
+    def rowMap(f: Row => String): String = jsonMap(results)(r => Some(f(r)))
+    // per-row wall normalized by a calibration bracket mean: a row whose
+    // WALL rose but whose NORM is flat moved with the host, not the
+    // code. `queries_norm` divides by the parallel-8 spin probe,
+    // `queries_norm_shuf` by the shuffle probe (prefer it for the
+    // shuffle/memory-bound rows; the spin twin separates clock drift).
+    // Key-aligned with the queries map: a failed row's negative sentinel
+    // (and a degenerate 0) passes through un-normalized instead of
+    // disappearing, so comparers joining the maps see symmetric key sets.
+    def normalized(calibMean: Double): String = rowMap { r =>
+      val v = r.reported
+      (if (v > 0 && calibMean > 0) math.rint(v / calibMean * 1000) / 1000 else v).toString
+    }
+    val qsJson = rowMap(_.reported.toString)
+    val qsNormJson = normalized((pass.pre.par + pass.post.par) / 2.0)
+    val qsNormShufJson = normalized((pass.pre.shuf + pass.post.shuf) / 2.0)
+    val trialsJson = rowMap(_.trials.mkString("[", ",", "]"))
+    val gcJson = rowMap(_.gcMs.mkString("[", ",", "]"))
     // only rows that touch a CacheOnce table carry an attribution entry
-    val cacheJson = results
-      .collect { case (k, _, _, _, c, _, _) if c.nonEmpty => "\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
+    val cacheJson = jsonMap(results)(r => Some(r.cache).filter(_.nonEmpty))
     // rows whose trial curve ROSE >1.5× first→last (reported as median
-    // of trials, not min) — the SAME flag measure() decided with, so
+    // of trials, not min) — the SAME flag timedTrials decided with, so
     // the list and the reported numbers cannot disagree
-    val risingJson = results
-      .collect { case (k, _, _, _, _, r, _) if r => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    // main-pass adjacent per-row probe readings (r20 verdict #1b)
-    val rowShufJson = results
-      .collect { case (k, _, _, _, _, _, rs) if rs >= 0 => "\"" + k + "\":" + rs }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0d).sum
+    val risingJson = jsonNames(results.filter(_.rising))
+    val rowShufJson = jsonMap(results)(r => Some(r.rowShuf).filter(_ >= 0).map(_.toString))
+    val total = results.map(_.reported).filter(_ >= 0d).sum
     // the 8 queries benched in every round since r4 — the stable
     // round-over-round comparison core
     val core8Names = Set("q1_agg", "join_star", "topk", "win_running_sum",
       "text_tokens", "text_tfidf", "dedup_minhash_lsh", "sim_topk_brute")
-    val core8 = results.filter(r => core8Names(r._1) && r._2 >= 0).map(_._2).sum
+    val core8 = results.filter(r => core8Names(r.name) && r.reported >= 0).map(_.reported).sum
     // Compact summary — the line the driver parses. Everything bulky
-    // (trials, cache, diag, the 3× section) lives on the detail line;
-    // this one stays well inside any plausible tail-capture window.
+    // (trials, cache, diag, the 3× section, errors) lives on the detail
+    // line; this one stays well inside any plausible tail-capture window.
     val line = s"""{"metric":"total","value":$total,"unit":"sec","core8":$core8,""" +
-      s""""calib_pre":$calibPre,"calib_post":$calibPost,""" +
-      s""""calib_par_pre":$calibParPre,"calib_par_post":$calibParPost,""" +
-      s""""calib_shuf_pre":$calibShufPre,"calib_shuf_post":$calibShufPost,""" +
-      s""""quiet":$quiet,"attempts":$attempts,$diag3xSummary""" +
+      s""""calib_pre":${pass.pre.serial},"calib_post":${pass.post.serial},""" +
+      s""""calib_par_pre":${pass.pre.par},"calib_par_post":${pass.post.par},""" +
+      s""""calib_shuf_pre":${pass.pre.shuf},"calib_shuf_post":${pass.post.shuf},""" +
+      s""""quiet":${pass.quiet},"attempts":${pass.attempts},$diag3xSummary""" +
       s""""queries":$qsJson,"queries_norm":$qsNormJson,""" +
       s""""queries_norm_shuf":$qsNormShufJson,""" +
       s""""rising":$risingJson,"sf":"$sfDir"}"""
     // deliberately NOT shaped {"metric":…}: a parser keyed on the first
-    // "metric" match in a tail window must only ever find the summary
-    val detailLine = s"""{"detail":"bench",$diag$diag3xDetail""" +
+    // "metric" match in a tail window must only ever find the summary.
+    // A def: failures to write the out files are recorded first.
+    def detailLine = s"""{"detail":"bench",$diag$diag3xDetail""" +
       s""""trials":$trialsJson,"gc_ms":$gcJson,"cache":$cacheJson,""" +
-      s""""row_shuf":$rowShufJson,"sf":"$sfDir"}"""
+      s""""row_shuf":$rowShufJson,""" +
+      errors.map { case (k, es) => Verify.jsonString(k) + ":" + es.mkString("[", ",", "]") }
+        .mkString("\"errors\":{", ",", "},") +
+      s""""sf":"$sfDir"}"""
     // The summary travels on TWO channels: a file (sbt prefixes stdout
-    // with [info] and interleaves WARNs, which broke the driver's parse
-    // in r1) and stdout printed AFTER spark.stop() so it is the FINAL
-    // clean line (the detail line prints before it and may be truncated
-    // by a tail window — it is supplementary and also lands in its own
-    // file).
+    // with [info] and interleaves WARNs) and stdout printed AFTER
+    // spark.stop() so it is the FINAL clean line (the detail line prints
+    // before it and may be truncated by a tail window — it is
+    // supplementary and also lands in its own file).
     val outFiles = Seq(
       sys.env.get("SPARK_GRAFT_BENCH_OUT"),
       if (args.nonEmpty) Some(args(0)) else None,
@@ -619,7 +470,7 @@ object Bench {
       try {
         val w = new java.io.PrintWriter(new java.io.File(f))
         try w.println(s) finally w.close()
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => record(f, "write")(e) }
     outFiles.foreach(writeLine(_, line))
     Seq("bench_detail.json", "/tmp/graft_bench_detail.json")
       .foreach(writeLine(_, detailLine))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off diagnostic main for the bm25 bench-spread investigation
   * (r12 verdict "What's wrong #2"): replicates Bench's exact session
   * conf and measurement loop but times ONLY the queries given as args,
@@ -12,7 +10,6 @@ import org.apache.spark.sql.SparkSession
 object BenchProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = args.headOption.map { a =>
       try a.toInt catch {
         case _: NumberFormatException => sys.error(
@@ -26,15 +23,7 @@ object BenchProbe {
     if (unknown.nonEmpty) sys.error(
       s"unknown bench queries: ${unknown.mkString(", ")} — " +
         s"benched names: ${known.toSeq.sorted.mkString(", ")}")
-    val spark = Engine.withHive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench-probe", Engine.localMaster)
     val qs = SparkEntry.benchQueries.filter(q => names.contains(q.name))
     val ordered = names.flatMap(nm => qs.find(_.name == nm))
     // per-trial DRIVER GC time (all collector beans summed): a trial

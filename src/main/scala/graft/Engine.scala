@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Engine façade: session configuration + catalog over the testdata layout.
+/** Engine façade: the session factory + catalog over the testdata layout.
   *
   * Matches the reference's query-visible semantics (Spark 1.3 fork — see
   * /root/reference/sql/catalyst/src/main/scala/org/apache/spark/sql/catalyst/expressions/Cast.scala:28
@@ -18,87 +18,72 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Runtime confs every query needs regardless of who built the session.
-    * Runs ONCE per session (guarded by a session-local conf flag):
-    * re-registering the native functions on every table() call produced
-    * "replaced a previously registered function" WARN spam and redundant
-    * session mutation on hot paths. */
-  def configure(spark: SparkSession): SparkSession = {
-    if (!spark.conf.getOption("spark.graft.configured").contains("true")) {
-      val c = spark.conf
-      c.set("spark.sql.ansi.enabled", "false") // 1.3 semantics: null, not error
-      c.set("spark.sql.session.timeZone", "UTC")
-      c.set("spark.sql.adaptive.enabled", "true")
-      c.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      c.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      // mismatched bucket counts (8 vs 4) still join shuffle-free by
-      // reading the finer side's buckets coalesced — the repeated
-      // fact-fact join posture when tables were bucketed independently
-      c.set("spark.sql.bucketing.coalesceBucketsInJoin.enabled", "true")
-      // r21 (r20 verdict #2): preserve cached-plan OUTPUT PARTITIONING.
-      // The text_tf/text_df posting caches are stored hash-partitioned
-      // on token (the Lucene posting-list layout) so the per-trial
-      // tf⋈df scoring join can ride the stored layout with zero
-      // exchanges. Spark 4 defaults this to true, which lets AQE
-      // re-plan the cache build; the cached plan's partitioning is then
-      // unknown at planning time and EnsureRequirements re-shuffles
-      // EVERY cached side on EVERY use (measured: 2 extra exchanges per
-      // text_tfidf trial, plans/r21/text_tfidf_*). Cluster-safe: this
-      // only restores the pre-3.5 guarantee that a cache keeps its
-      // build partitioning; index builds run once per session and don't
-      // need AQE's post-shuffle coalescing.
-      c.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      // nanos timestamps in events.parquet: read as LONG then convert
-      // explicitly where needed (legacy flag keeps the scan vectorized).
-      c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata timestamps are naive micros (no isAdjustedToUTC flag);
-      // read them as session-zone instants (TIMESTAMP, matching the
-      // DuckDB oracle's rendering under the UTC session zone) rather
-      // than TIMESTAMP_NTZ, which watermarks and unix_micros reject.
-      c.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      graft.plans.Hamming64.register(spark)
-      graft.plans.CosineSim.register(spark)
-      graft.plans.TopKAgg.register(spark)
-      graft.plans.MinHash16.register(spark)
-      graft.plans.IntL2.register(spark)
-      graft.plans.Overlap64.register(spark)
-      graft.plans.GraftRules.install(spark)
-      c.set("spark.graft.configured", "true")
-    }
-    spark
-  }
+  /** The master of Verify, Bench and BenchProbe:
+    * `local[$SPARK_GRAFT_CPUS]`, 32 cores when unset. */
+  def localMaster: Option[String] =
+    Some(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
 
-  /** Hive-metastore confs shared by every session builder: a real
-    * HiveExternalCatalog (HiveTableScan / InsertIntoHiveTable parity)
-    * backed by an in-memory Derby metastore — unique per JVM, so
-    * concurrent JVMs (sbt test + Verify) never contend on a metastore
-    * lock, and the catalog state is rebuilt by each query (which are all
-    * repetition-safe by construction). */
-  def withHive(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("javax.jdo.option.ConnectionURL",
-      s"jdbc:derby:memory:graftms${java.lang.ProcessHandle.current().pid()};create=true")
-    .enableHiveSupport()
+  private val LocalMaster = """local\[(\d+)\]""".r
 
-  /** Standalone session for mains/tests. local[*] here; on a cluster the
-    * same builder settings apply unchanged. */
+  /** The one place a session is built. Everything a query relies on is
+    * set here, at construction, so a run's result never depends on who
+    * built the session or which query touched it first: the confs, the
+    * Hive catalog, the six native functions, the optimizer rules and the
+    * AsOf planner strategy. A `local[k]` master gets k shuffle
+    * partitions; on a cluster the same settings apply unchanged. */
   def session(appName: String = "graft", master: Option[String] = None): SparkSession = {
     val b = SparkSession.builder().appName(appName)
     master.foreach(b.master)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = withHive(b
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    master.collect { case LocalMaster(k) => k.toLong }
+      .foreach(k => b.config("spark.sql.shuffle.partitions", k))
+    val spark = b
+      // a real HiveExternalCatalog (HiveTableScan / InsertIntoHiveTable
+      // parity) over an in-memory Derby metastore unique per JVM, so
+      // concurrent JVMs never contend on a metastore lock; every query
+      // rebuilds the catalog state it needs
+      .config("javax.jdo.option.ConnectionURL",
+        s"jdbc:derby:memory:graftms${java.lang.ProcessHandle.current().pid()};create=true")
+      .enableHiveSupport()
+      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.ui.enabled", "false")
-      // the eager census attributes ~1500 job groups (726 rows × 2
-      // passes) through the status store; the default retention (1000
-      // jobs) can evict early groups mid-census and misread an eager row
-      // as lazy (r16 ADVICE) — retention must exceed the census volume
+      // the eager census attributes ~1500 job groups through the status
+      // store; retention must exceed that or early groups are evicted
+      // and an eager row reads as lazy
       .config("spark.ui.retainedJobs", "20000")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
+      .config("spark.sql.ansi.enabled", "false") // 1.3 semantics: null, not error
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // mismatched bucket counts (8 vs 4) still join shuffle-free by
+      // reading the finer side's buckets coalesced
+      .config("spark.sql.bucketing.coalesceBucketsInJoin.enabled", "true")
+      // a cache keeps its build partitioning: the text_tf/text_df posting
+      // caches are stored hash-partitioned on token so the tf⋈df scoring
+      // join rides that layout with no exchange. Spark 4's default lets
+      // AQE re-plan the cache build, leaving its partitioning unknown at
+      // planning time, and every cached side is then re-shuffled on
+      // every use.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+      // nanos timestamps in events.parquet: read as LONG then convert
+      // explicitly where needed (legacy flag keeps the scan vectorized)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // testdata timestamps are naive micros (no isAdjustedToUTC flag);
+      // read them as session-zone instants (TIMESTAMP, matching the
+      // DuckDB oracle's rendering under the UTC session zone) rather
+      // than TIMESTAMP_NTZ, which watermarks and unix_micros reject
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    configure(spark)
+    import graft.plans._
+    Seq(Hamming64.register _, CosineSim.register _, TopKAgg.register _,
+      MinHash16.register _, IntL2.register _, Overlap64.register _).foreach(_(spark))
+    // session-scoped, so the rules run in the terminal "User Provided
+    // Optimizers" batch, after RewriteDistinctAggregates (README, Sessions)
+    spark.experimental.extraOptimizations = Seq(SimplifySelfHamming, LinearizeNullSafeCountAgg)
+    spark.experimental.extraStrategies = Seq(AsOfJoinStrategy)
+    spark
   }
 
   /** Read one testdata table. Plain parquet scan — Catalyst pushes filters
@@ -113,7 +98,6 @@ object Engine {
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    configure(spark)
     val path = s"$dir/$name.parquet"
     val sch = schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)

@@ -135,7 +135,7 @@ object TextFunctions {
   }
 
   /** Native codegen'd cosine (graft.plans.CosineSim, registered by
-    * Engine.configure) — bit-identical to `cosine` but one primitive
+    * Engine.session) — bit-identical to `cosine` but one primitive
     * loop, no intermediate arrays. Preferred in scan-stage hot paths. */
   def cosineFast(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -39,8 +39,8 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Strategy: plan the logical AsOfJoin into its exec. Installed via
-  * spark.experimental.extraStrategies (see AsOfJoin.install). */
+/** Strategy: plan the logical AsOfJoin into its exec. Installed by
+  * `Engine.session` via spark.experimental.extraStrategies. */
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lts, rts) =>
@@ -130,21 +130,12 @@ case class AsOfJoinExec(
 }
 
 object AsOfJoin {
-  /** Install the planner strategy on a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
-
   /** LEFT OUTER backward as-of join: equal keys, right.ts ≤ left.ts.
     * Keys must be BIGINT; ts must be BIGINT or TIMESTAMP (both compared
     * on their 64-bit value). Output = left columns ++ right columns
     * (nullable) — give the two sides distinct column names. */
   def asof(left: DataFrame, leftKey: String, leftTs: String,
       right: DataFrame, rightKey: String, rightTs: String): DataFrame = {
-    val spark = left.sparkSession
-    install(spark)
     def attr(df: DataFrame, name: String): Attribute =
       df.queryExecution.analyzed.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"asof: no column '$name' in ${df.columns.mkString(",")}"))
@@ -158,6 +149,6 @@ object AsOfJoin {
       check(attr(right, rightKey), s"right key '$rightKey'"),
       check(attr(left, leftTs), s"left ts '$leftTs'"),
       check(attr(right, rightTs), s"right ts '$rightTs'"))
-    org.apache.spark.sql.GraftShim.ofRows(spark, plan)
+    org.apache.spark.sql.GraftShim.ofRows(left.sparkSession, plan)
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
@@ -14,9 +13,9 @@ import org.apache.spark.sql.types.IntegerType
   * `graft_hamming64(x, x)` is identically 0, so fold it before it reaches
   * execution — a domain-specific algebraic rewrite Catalyst can't know.
   *
-  * Injected through `spark.experimental.extraOptimizations`, the public
-  * hook for session-scoped rules (SparkSessionExtensions offers the same
-  * at builder time).
+  * Installed by `Engine.session` through
+  * `spark.experimental.extraOptimizations`, the public hook for
+  * session-scoped rules.
   */
 object SimplifySelfHamming extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -629,16 +628,5 @@ object LinearizeNullSafeCountAgg extends Rule[LogicalPlan] {
         }
         case _ => agg
       }
-  }
-}
-
-object GraftRules {
-  /** Idempotently install the graft optimizer rules on a session. */
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    val mine = Seq(SimplifySelfHamming, LinearizeNullSafeCountAgg)
-    val missing = mine.filterNot(current.contains)
-    if (missing.nonEmpty)
-      spark.experimental.extraOptimizations = current ++ missing
   }
 }

@@ -658,7 +658,6 @@ object SourceQueries {
     Q("src_state_store",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        graft.Engine.configure(s)
         val stamp = System.nanoTime()
         val srcDir = s"/tmp/graft_stream/statesrc_$stamp"
         val ckpt = s"${graft.streaming.StreamRunner.ckptRoot(s)}/statesrc-$stamp"

@@ -285,7 +285,6 @@ object Sql12Queries {
     // registry.
     Q("sql_show_graft_functions",
       (s, _) => {
-        graft.Engine.configure(s)
         // other declared rows register additional graft_* session UDFs
         // as they run, so the assertion is membership of the SIX native
         // kernels, not an exhaustive listing (which is order-dependent)

@@ -42,7 +42,6 @@ object Sql6Queries {
     // re-mapping through the catalog-stored view text.
     Q("sql_view_nested",
       (s, d) => {
-        graft.Engine.configure(s)
         s.sql("DROP VIEW IF EXISTS graft_v2")
         s.sql("DROP VIEW IF EXISTS graft_v1")
         s.sql(sql(s"""CREATE VIEW graft_v1 (nk, nname, rk) AS

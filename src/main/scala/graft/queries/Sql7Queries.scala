@@ -132,7 +132,6 @@ object Sql7Queries {
     // the four visibility cells).
     Q("sql_session_isolation",
       (s, d) => {
-        graft.Engine.configure(s)
         s.sql("CREATE OR REPLACE TEMP VIEW graft_iso_tv AS SELECT 1 AS x")
         s.sql("CREATE OR REPLACE GLOBAL TEMP VIEW graft_iso_gv AS SELECT 2 AS x")
         val s2 = s.newSession()
@@ -162,7 +161,6 @@ object Sql7Queries {
     // aggregate. DuckDB double-quotes the same names.
     Q("sql_quoted_idents",
       (s, d) => {
-        graft.Engine.configure(s)
         s.sql(sql("""CREATE OR REPLACE TEMP VIEW graft_q7 AS
           SELECT n_nationkey AS `key col`, n_name AS `n.name`,
                  n_regionkey AS `select`, upper(n_name) AS `tick``col`
@@ -191,7 +189,6 @@ object Sql7Queries {
     // oracle pins catalog METADATA, not just query results.
     Q("sql_catalog_ddl",
       (s, d) => {
-        graft.Engine.configure(s)
         Registry.dropManaged(s, "graft_ddl_t")
         s.sql("CREATE TABLE graft_ddl_t (a INT, b STRING) USING parquet")
         s.sql("INSERT INTO graft_ddl_t VALUES (1, 'x'), (2, 'y')")
@@ -238,7 +235,6 @@ object Sql7Queries {
     // ENGINE's defined padding behavior, not an oracle recomputation.
     Q("sql_char_padding",
       (s, d) => {
-        graft.Engine.configure(s)
         Registry.dropManaged(s, "graft_char_t")
         s.sql("CREATE TABLE graft_char_t (id INT, c CHAR(6), v VARCHAR(6)) USING parquet")
         s.sql("INSERT INTO graft_char_t VALUES (1, 'abc', 'abc'), (2, 'abcdef', 'abcdef')")

@@ -278,7 +278,6 @@ object Sql8Queries {
     // (PlanSpec pins InMemoryTableScan in this plan).
     Q("sql_cache_table",
       (s, d) => {
-        graft.Engine.configure(s)
         table(s, d, "lineitem").createOrReplaceTempView("graft_li_cache")
         // the cached projection stays resident for the session (dropped
         // at the start of the NEXT invocation); the cached_qty alias
@@ -306,7 +305,6 @@ object Sql8Queries {
     // class); the oracle restates the truth from the source table.
     Q("sql_analyze_stats",
       (s, d) => {
-        graft.Engine.configure(s)
         Registry.dropManaged(s, "graft_stats_nation")
         s.sql(sql(s"""CREATE TABLE graft_stats_nation AS
                       SELECT * FROM parquet.`$d/nation.parquet`"""))

@@ -746,7 +746,6 @@ object StreamingQueries {
     Q("stream_ckpt_recovery",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        graft.Engine.configure(s)
         val stamp = System.nanoTime()
         val srcDir = s"/tmp/graft_stream/ckptrec_src_$stamp"
         val ckpt = s"${StreamRunner.ckptRoot(s)}/ckptrec-$stamp"
@@ -797,7 +796,6 @@ object StreamingQueries {
     Q("stream_gopher_gate",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        graft.Engine.configure(s)
         val stamp = System.nanoTime()
         val srcDir = s"/tmp/graft_stream/gopher_src_$stamp"
         val ckpt = s"${StreamRunner.ckptRoot(s)}/gopher-$stamp"
@@ -851,7 +849,6 @@ object StreamingQueries {
     // The oracle is the timeline's finalized sessions as literals.
     Q("stream_tws_timers",
       (s, d) => withRocksDBStateStore(s) {
-        graft.Engine.configure(s)
         val sq = s; import sq.implicits._
         val stamp = System.nanoTime()
         val srcDir = s"/tmp/graft_stream/twstimer_src_$stamp"
@@ -913,7 +910,6 @@ object StreamingQueries {
     // plan shape, not the transactional guard.
     Q("stream_merge_upsert",
       (s, d) => {
-        graft.Engine.configure(s)
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
         Engine.events(s, d).select(col("user_id")).distinct()
           .select(col("user_id"), lit(0L).as("n_events"), lit(0L).as("sum_ids"))
@@ -966,7 +962,6 @@ object StreamingQueries {
     Q("stream_to_table",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        graft.Engine.configure(s)
         Registry.dropManaged(s, "graft_stream_sink")
         // file-backed tables are APPEND-ONLY sinks (complete/update
         // raise STREAMING_OUTPUT_MODE.UNSUPPORTED_DATASOURCE) — the
@@ -1018,7 +1013,6 @@ object StreamingQueries {
 
     Q("stream_late_data",
       (s, d) => {
-        graft.Engine.configure(s)
         val sq = s; import sq.implicits._
         val stamp = System.nanoTime()
         val srcDir = s"/tmp/graft_stream/late_src_$stamp"
@@ -1108,7 +1102,6 @@ object StreamingQueries {
     // records (batch_id, rows); the per-batch ledger IS the result.
     Q("stream_avail_now_batches",
       (s, _) => {
-        graft.Engine.configure(s)
         val sq = s; import sq.implicits._
         val stamp = System.nanoTime()
         val srcDir = s"/tmp/graft_stream/adm_src_$stamp"
@@ -1160,7 +1153,6 @@ object StreamingQueries {
     // update mode feeds exactly-the-deltas to an upsert sink.
     Q("stream_update_mode",
       (s, d) => {
-        graft.Engine.configure(s)
         val sq = s; import sq.implicits._
         val stamp = System.nanoTime()
         val srcDir = s"/tmp/graft_stream/updmode_$stamp"
@@ -1213,7 +1205,6 @@ object StreamingQueries {
     // emits — the unfinalized tail contract.
     Q("stream_mgws_timeout",
       (s, d) => {
-        graft.Engine.configure(s)
         val sq = s; import sq.implicits._
         val stamp = System.nanoTime()
         val srcDir = s"/tmp/graft_stream/mgwsto_$stamp"

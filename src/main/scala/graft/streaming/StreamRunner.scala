@@ -34,7 +34,6 @@ object StreamRunner {
   val Batches = 4
 
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.Engine.configure(spark)
     val path = s"$dir/events.parquet"
     // Stage the events as `Batches` range-partitioned-by-ts files with
     // ascending mtimes, so the file source (which orders by modification
@@ -73,7 +72,6 @@ object StreamRunner {
     * Same fingerprint-keyed, atomically-renamed staging as
     * [[eventsStream]]. */
   def documentsStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.Engine.configure(spark)
     val path = s"$dir/documents.parquet"
     val d = graft.Staging.once(java.nio.file.Paths.get(
       s"/tmp/graft_stream/docs_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${graft.Staging.fingerprint(path)}")) { tmp =>

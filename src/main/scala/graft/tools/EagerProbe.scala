@@ -18,7 +18,6 @@ object EagerProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = Engine.session("graft-eager-probe", Some("local[8]"))
-    spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     // warm pass: absorb one-time declaration effects (schema caches,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r15 lever #1 adjudication): the containment funnel in
   * three honest numbers — gram-level join matches ("candidates"),
   * distinct pairs entering the verify ("verify_rows"), and TRUE answer
@@ -13,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object FunnelDiag {
   def main(args: Array[String]): Unit = {
     val sfArg = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Engine.withHive(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("graft-funnel-diag", Some("local[32]"))
     // "3x" = the derived 3× replication fixture (the bench's scale probe)
     val sfDir =
       if (sfArg == "3x") graft.ScaleFixture.dir(spark, "/root/testdata/sf0.1")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r15): quantify LinearizeNullSafeCountAgg's benefit — the
   * jn_nullsafe_engine rows timed with the rule INSTALLED vs REMOVED
   * (verbatim quadratic-bucket execution) at sf0.1 and the derived 3×
@@ -12,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object NullSafeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Engine.withHive(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("graft-nullsafe-bench", Some("local[32]"))
     val dirs = Seq("sf0.1" -> sfDir, "3x" -> graft.ScaleFixture.dir(spark, sfDir))
 
     def time(name: String, dir: String): (Double, Long) = {

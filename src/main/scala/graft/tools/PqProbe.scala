@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r21): isolate where sim_topk_pq's wall goes — times each
@@ -9,16 +8,7 @@ import org.apache.spark.sql.functions._
 object PqProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Engine.withHive(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Engine.configure(spark)
+    val spark = graft.Engine.session("graft-pq-probe", Some("local[32]"))
     def time(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       try { df.write.format("noop").mode("overwrite").save() } catch { case _: Throwable => () }
       val ts = (1 to 3).map { _ =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev tool: stage-level timing of one declared query under the Bench
@@ -19,16 +18,7 @@ object ProfileContain {
     val sfDir = args.drop(1).headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Engine.withHive(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("PROF_BCAST", (64L * 1024 * 1024).toString))
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("graft-profile-contain", Some("local[32]"))
     val q = graft.SparkEntry.queries(name)
     q(spark, sfDir).write.format("noop").mode("overwrite").save() // warm-up
 

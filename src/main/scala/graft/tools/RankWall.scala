@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r21, r20 verdict #6): rank EVERY declared registry query by
   * its Verify-style wall at a given SF — one declaration + one noop-sink
   * materialization per query, timed, in one session under the Bench
@@ -18,15 +16,7 @@ object RankWall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val topN = args.drop(1).headOption.map(_.toInt).getOrElse(30)
-    val spark = graft.Engine.withHive(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("graft-rank-wall", Some("local[32]"))
     val rows = graft.SparkEntry.registry.map { q =>
       spark.sparkContext.setJobDescription(s"rankwall: ${q.name}")
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
@@ -15,15 +14,7 @@ object ReuseCheck {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("dedup_containment")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Engine.withHive(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("graft-reuse-check", Some("local[32]"))
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.collect(): Unit
     def walk(p: SparkPlan): Seq[SparkPlan] =

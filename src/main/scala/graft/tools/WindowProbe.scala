@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{Engine, SparkEntry}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Window
 
 /** One-shot census: which registry rows DECLARE a plan containing an
@@ -11,14 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
 object WindowProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Engine.withHive(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session("graft-window-probe", Some("local[8]"))
     val names = SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       try {

@@ -29,7 +29,6 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("native graft functions are listed in the function registry") {
-    Engine.configure(spark)
     val fns = spark.catalog.listFunctions().collect().map(_.name.toLowerCase).toSet
     for (f <- Seq("graft_hamming64", "graft_cosine", "graft_topk", "graft_minhash16"))
       assert(fns.contains(f), s"$f missing from catalog function listing")

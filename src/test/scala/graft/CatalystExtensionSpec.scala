@@ -52,7 +52,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_hamming64 computes popcount of xor") {
-    Engine.configure(spark)
     val rows = Seq((255L, 240L), (0L, 0L), (1L, -1L)).toDF("a", "b")
       .selectExpr("graft_hamming64(a, b) AS h").as[Int].collect()
     assert(rows.toSeq === Seq(4, 0, 63))
@@ -65,7 +64,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("SimplifySelfHamming folds hamming(x, x) to literal 0") {
-    Engine.configure(spark)
     val df = Seq(42L).toDF("x").selectExpr("graft_hamming64(x, x) AS h")
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(!optimized.contains("graft_hamming64"), optimized)
@@ -80,7 +78,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_cosine matches the composable zip_with form on equal-length input") {
-    Engine.configure(spark)
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f)))
       .toDF("a", "b")
     val native = df.selectExpr("graft_cosine(a, b) AS c").as[Double].collect()(0)
@@ -95,7 +92,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_cosine null-propagates on ragged lengths and null elements") {
-    Engine.configure(spark)
     // ragged: 3 vs 2 elements → NULL (mirrors zip_with null propagation)
     val ragged = Seq((Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f))).toDF("a", "b")
       .selectExpr("graft_cosine(a, b) AS c").collect()(0)
@@ -113,7 +109,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_minhash16 equals the 16 composed array_min minhashes") {
-    Engine.configure(spark)
     import graft.functions.Portable
     val docs = Seq("the quick brown fox jumps over the lazy dog",
         "pack my box with five dozen liquor jugs and more",
@@ -130,7 +125,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_minhash16 of an empty hash array is null (array_min parity)") {
-    Engine.configure(spark)
     val r = Seq(Seq.empty[Long]).toDF("hs").selectExpr("graft_minhash16(hs) AS mh").collect()(0)
     assert(r.isNullAt(0))
   }
@@ -145,7 +139,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_topk keeps the best k by (score desc, id asc) across partitions") {
-    Engine.configure(spark)
     // 1000 rows over 8 partitions forces real partial/merge; scores tie
     // in pairs (score = id/2) so the id-asc tie-break is exercised
     val rows = (0L until 1000L).map(i => (i % 3, (i / 2).toDouble, i))
@@ -165,7 +158,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_topk matches a window top-k over 200k high-cardinality rows") {
-    Engine.configure(spark)
     import org.apache.spark.sql.expressions.Window
     val df = spark.range(0, 200000)
       .selectExpr("id % 7 AS g", "CAST((id * 131) % 997 AS DOUBLE) AS score", "id")
@@ -183,7 +175,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("native as-of join handles synthetic edge cases (no match, future-only, equal ts)") {
-    Engine.configure(spark)
     // key 1: clicks before and after; key 2: only future clicks (no
     // match); key 3: no clicks at all; key 4: click at EXACTLY the
     // purchase ts (>= must match)
@@ -204,7 +195,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_topk skips null inputs and caps state at k") {
-    Engine.configure(spark)
     val out = Seq[(java.lang.Double, java.lang.Long)](
       (1.0, 10L), (null, 11L), (2.0, null), (3.0, 12L))
       .toDF("score", "id")
@@ -215,7 +205,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_intl2 matches the composable zip_with form") {
-    Engine.configure(spark)
     val df = Seq((Array(5L, -3L, 10L), Array(1L, 2L, 10L))).toDF("a", "b")
     val native = df.selectExpr("graft_intl2(a, b) AS d").as[Long].collect()(0)
     val composed = df.select(
@@ -226,7 +215,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_intl2 null-propagates on ragged lengths and rejects non-bigint") {
-    Engine.configure(spark)
     val ragged = Seq((Array(1L, 2L, 3L), Array(1L, 2L))).toDF("a", "b")
       .selectExpr("graft_intl2(a, b) AS d").collect()(0)
     assert(ragged.isNullAt(0))
@@ -238,7 +226,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_overlap64 matches size(array_intersect) on sorted arrays") {
-    Engine.configure(spark)
     // includes duplicates (hash collisions count once), ragged lengths,
     // negative values, and disjoint / identical / empty cases
     val cases = Seq(
@@ -260,7 +247,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_overlap64 equals array_intersect on scalacheck-generated sorted arrays") {
-    Engine.configure(spark)
     import org.scalacheck.Gen
     // skewed element domain (0..40) forces dense duplicate/overlap
     // structure that uniform 64-bit values would never produce
@@ -276,7 +262,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_overlap64 is null-safe and rejects non-bigint arrays") {
-    Engine.configure(spark)
     val r = Seq((Some(Array(1L)), Option.empty[Array[Long]])).toDF("a", "b")
       .selectExpr("graft_overlap64(a, b) AS o").collect()(0)
     assert(r.isNullAt(0))
@@ -288,7 +273,6 @@ class CatalystExtensionSpec extends AnyFunSuite {
   }
 
   test("graft_overlap64 yields NULL, never a miscount, on null array ELEMENTS") {
-    Engine.configure(spark)
     // getLong would read a null element as 0 — the guard must return
     // NULL instead of silently counting the phantom zero. Exercise both
     // the codegen path (column input) and a case where only one side

@@ -1930,7 +1930,7 @@ class PlanSpec extends AnyFunSuite {
   test("tfidf trial path: ONE exchange (the window), zero file scans (r21)") {
     // r21: tf/df are token-partitioned index caches and the corpus count
     // is an index column, so the scoring join rides the stored layout
-    // (cached-plan output partitioning preserved — Engine.configure) and
+    // (cached-plan output partitioning preserved — Engine.session) and
     // the only shuffle left is the per-doc window's. A regression that
     // re-shuffles a cached side, re-scans documents, or re-aggregates df
     // per trial adds an exchange or a file scan here.

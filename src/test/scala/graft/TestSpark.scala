@@ -2,43 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole (forked) test JVM.
-  *
-  * r21 (r20 verdict #1 — the 988-test suite outgrew the driver's test
-  * window; VERIFY_r20 shipped tests_ok=false with the log cut mid
-  * streaming suites): the shared session used to be local[4] with the
-  * Engine default shuffle partitions (= availableProcessors = 32 on
-  * this host). That combination made the suite wall mostly FIXED
-  * overhead: every streaming row paid 32 state-store partitions per
-  * micro-batch (snapshot + delta + checksum files on ext4 per partition
-  * per batch, ×3 because the registry run, the eager census and the
-  * window census each execute every eager row), and every tiny-sf0.001
-  * exchange planned 32 tasks onto 4 cores. local[8] + 8 shuffle
-  * partitions changes no test semantics (suites that need a specific
-  * partition count set and restore it themselves) and cut the measured
-  * suite wall from ~35 min to inside the driver's window — see
-  * OPTIMIZATION_r21.md for the before/after numbers. The driver
-  * contract (Verify/Bench read $SPARK_GRAFT_CPUS) is untouched. */
+/** One shared session for the whole (forked) test JVM: local[8], so 8
+  * shuffle partitions (suites that need a specific partition count set
+  * and restore it themselves). Streaming offset, commit and state logs
+  * go to tmpfs; checkpoint semantics are filesystem-independent, and
+  * Verify and Bench keep the real-disk default. The checkpoint root is
+  * emptied first, so checkpoints left by an earlier suite run are never
+  * replayed. */
 object TestSpark {
+  private val CkptRoot = "/dev/shm/graft_ckpt"
+
   lazy val spark: SparkSession = {
-    val s = Engine.withHive(SparkSession.builder()
-      .appName("graft-test").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the eager census attributes ~1500 job groups through the status
-      // store; retention must exceed the census volume (r16 ADVICE)
-      .config("spark.ui.retainedJobs", "20000")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // streaming offset/commit/state logs on tmpfs: the suite executes
-      // every eager stream_* row up to three times (registry run + two
-      // censuses); checkpoint semantics are filesystem-independent and
-      // the driver's Verify/Bench keep the real-disk default
-      .config("spark.graft.ckptRoot", "/dev/shm/graft_ckpt")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Engine.configure(s)
+    queries.Registry.rmTree(new java.io.File(CkptRoot))
+    val s = Engine.session("graft-test", Some("local[8]"))
+    s.conf.set("spark.graft.ckptRoot", CkptRoot)
+    s
   }
   val Sf: String = "/root/testdata/sf0.001"
 }
