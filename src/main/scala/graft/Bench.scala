@@ -238,8 +238,8 @@ object Bench {
     qs.foreach(warmUp(_, sfDir, "warmup"))
 
     // Each row also carries its CacheOnce attribution: which shared
-    // signature tables the trials touched, whether the swap was a
-    // reuse, and the keys' block-manager state BEFORE the trials — so a
+    // signature tables the trials touched, whether each lookup was a
+    // hit, and the keys' block-manager state BEFORE the trials — so a
     // spread on cache-sharing rows (text_tf feeds both text_tfidf and
     // text_bm25_topk) is decidable from the artifact.
     def cacheAttribution(
@@ -247,10 +247,10 @@ object Bench {
         ev: Seq[(String, Boolean)]): String =
       if (ev.isEmpty) "" else {
         val touched = ev.map(_._1).distinct.sorted
-        val swapMiss = ev.exists(!_._2)
+        val anyMiss = ev.exists(!_._2)
         // cache_hit = the trials re-used tables that were ALREADY fully
         // materialized; false means this row paid (part of) the build
-        val hit = !swapMiss &&
+        val hit = !anyMiss &&
           touched.forall(k => preSnap.get(k).exists(_._1 >= 0.999))
         val keys = touched.map { k =>
           val (f, m, dk) = preSnap.getOrElse(k, (0.0, 0L, 0L))
@@ -260,7 +260,7 @@ object Bench {
           val frac = String.format(java.util.Locale.ROOT, "%.3f", Double.box(f))
           s""""$k":{"pre_frac":$frac,"pre_mem":$m,"pre_disk":$dk}"""
         }.mkString(",")
-        s"""{"cache_hit":$hit,"swap_miss":$swapMiss,"keys":{$keys}}"""
+        s"""{"cache_hit":$hit,"swap_miss":$anyMiss,"keys":{$keys}}"""
       }
 
     def timeRow(q: queries.Q, dir: String, at: String): Row = {

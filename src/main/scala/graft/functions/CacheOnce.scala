@@ -4,51 +4,47 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
-/** Keyed persist with swap semantics: re-registering a key unpersists the
-  * previous DataFrame first, so repeated query invocations (Verify runs
-  * every query in one session; Bench re-runs trials) hold at most ONE
-  * cached copy per signature table instead of leaking a new one per call.
+/** Keyed, persisted index tables, built only on a miss.
   *
-  * Re-registering an EQUIVALENT plan (sameResult — same sfDir, same
-  * conf-derived literals) returns the already-persisted DataFrame
-  * instead of swapping: without this, every Bench trial unpersisted and
-  * recomputed the signature tables (18M md5 gram hashes at sf0.1),
-  * silently defeating the bench's documented warm-up trial — the same
-  * dedup-by-equivalence Spark's own CacheManager applies. A genuinely
-  * different plan (new scale dir, changed spark.graft.* conf) still
-  * swaps.
+  * `get(key, deps: _*)(build)` holds at most ONE persisted DataFrame per
+  * key. A lookup is a HIT when both hold:
+  *  - the stored `deps` equal the given ones (element-wise `==`); and
+  *  - the bounded filesystem fingerprint of the stored DataFrame's file
+  *    roots is unchanged.
+  * A hit returns the stored DataFrame and never evaluates `build`, so a
+  * query that runs again pays neither the declaration nor the analysis
+  * of the plan that builds its index. A MISS unpersists the previous
+  * entry, evaluates `build`, persists it (MEMORY_AND_DISK, lazily) and
+  * records it. A `build` that throws leaves no entry behind.
   *
-  * ENFORCED contract: plan equivalence compares root PATHS, so a reuse
-  * hit additionally re-checks a BOUNDED filesystem fingerprint: a
-  * breadth-first walk over the root's directory tree capped at
-  * [[MaxDirs]] listStatus calls, each visited directory contributing
-  * ONE aggregate line (own mtime + file-child count, total length, max
-  * file mtime). A fixture regenerated in-process at a previously cached
-  * path therefore SWAPS — recompute, never stale data — including
-  * rewrites nested inside partition subdirectories, which change their
-  * directory's aggregate. Driver-side fs metadata only; no job; the
-  * walk is O(directories), never O(part-files), and hard-capped so a
-  * petabyte table with millions of part files costs at most ~[[MaxDirs]]
-  * list calls per re-registration, not a full recursive listing.
-  * Residual windows (both outside every fixture-regeneration path):
-  * (a) a same-millisecond, same-length in-place rewrite of a leaf file
-  * is indistinguishable by metadata (content hashing would need a job);
-  * (b) a rewrite nested strictly below the [[MaxDirs]] BFS frontier —
-  * frontier directories are recorded by their own mtime only, which an
-  * ancestor of the rewritten dir need not change. Fixture trees are
-  * tiny (≪ 64 dirs), so in tests the walk is always exhaustive; the cap
-  * only engages at production scale, where tables are not silently
-  * regenerated under a live cache.
+  * `deps` must name everything the build reads other than file content:
+  * the session, the scale dir, each conf the build reads, and, for an
+  * index built over another key's DataFrame, that upstream DataFrame (a
+  * rebuilt upstream is a new object, so the keys over it rebuild too).
+  * DataFrames and sessions compare by reference. A key has one builder
+  * function; two spellings under one key would share an index silently
+  * (CacheOnceSpec scans `src/main` for this).
+  *
+  * The fingerprint guards what `deps` cannot see: a fixture regenerated
+  * in place at a path that is already cached. It is a breadth-first
+  * walk over each file root capped at [[MaxDirs]] `listStatus` calls;
+  * each visited directory contributes one aggregate line (own mtime,
+  * file-child count, total length, max file mtime), so a rewrite nested
+  * inside a partition subdirectory changes it too. Driver-side metadata
+  * only, no job, O(directories) and hard-capped. It misses (a) a
+  * same-millisecond, same-length in-place rewrite of a leaf file, and
+  * (b) a rewrite strictly below the [[MaxDirs]] frontier, whose
+  * directories are recorded by their own mtime only. Fixture trees are
+  * far below the cap, so in tests the walk is exhaustive.
   */
 object CacheOnce {
-  private val cached =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, Seq[String])]
+  private final case class Entry(df: DataFrame, deps: Seq[Any], fp: Seq[String])
 
-  /** Swap-event log for bench attribution: one (key, reused) entry per
-    * swap() call. Bench drains it around each query's timed trials so
-    * the artifact records whether a row re-used an already-registered
-    * signature table or paid a fresh persist (the r11 verdict's
-    * text_bm25_topk-vs-text_tfidf 0.44-vs-1.60 s ambiguity). */
+  private val cached = scala.collection.concurrent.TrieMap.empty[String, Entry]
+
+  /** Lookup log for bench attribution: one (key, hit) entry per get()
+    * call. Bench and perfbench drain it around a query's trials to tell
+    * an index hit from a fresh build. */
   private val events =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
 
@@ -63,10 +59,10 @@ object CacheOnce {
     * (fraction of cached partitions actually materialized, bytes in
     * memory, bytes on disk). A key whose buffers were never loaded (or
     * evicted wholesale) reads (0, 0, 0) — a trial that then touches it
-    * pays the rebuild even though swap() reports a reuse. Driver-side
+    * pays the rebuild even though get() reports a hit. Driver-side
     * introspection only; no job. */
   def storageSnapshot(): Map[String, (Double, Long, Long)] =
-    cached.toMap.map { case (key, (df, _)) =>
+    cached.toMap.map { case (key, Entry(df, _, _)) =>
       import org.apache.spark.sql.execution.columnar.InMemoryRelation
       val st = try {
         df.queryExecution.withCachedData.collectFirst {
@@ -92,8 +88,8 @@ object CacheOnce {
     * directory yields `relPath@dirMtime:dir`. Relative paths come from
     * URI paths on both sides, so scheme qualification differences
     * between the analyzed root and the listed children cannot embed
-    * absolute paths. Non-file leaves contribute nothing and are covered
-    * by sameResult alone. */
+    * absolute paths. Non-file leaves contribute nothing; `deps` covers
+    * them. */
   private def fingerprint(df: DataFrame): Seq[String] = {
     val conf = df.sparkSession.sessionState.newHadoopConf()
     df.queryExecution.analyzed.collect {
@@ -137,18 +133,17 @@ object CacheOnce {
     }.flatten
   }
 
-  def swap(key: String, df: DataFrame): DataFrame = {
-    val fp = fingerprint(df)
+  /** Lookups are serialised, so concurrent callers of one key (the
+    * pooled FuzzSpec legs) build it once. */
+  def get(key: String, deps: Any*)(build: => DataFrame): DataFrame = synchronized {
     cached.get(key) match {
-      case Some((prev, prevFp))
-          if prevFp == fp &&
-            prev.queryExecution.analyzed.sameResult(df.queryExecution.analyzed) =>
+      case Some(e) if e.deps == deps && fingerprint(e.df) == e.fp =>
         events.add(key -> true): Unit
-        prev
+        e.df
       case _ =>
-        cached.remove(key).foreach(_._1.unpersist(blocking = false))
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        cached.put(key, (p, fp))
+        cached.remove(key).foreach(_.df.unpersist(blocking = false))
+        val p = build.persist(StorageLevel.MEMORY_AND_DISK)
+        cached.put(key, Entry(p, deps, fingerprint(p)))
         events.add(key -> false): Unit
         p
     }

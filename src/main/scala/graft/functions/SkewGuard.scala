@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Hot-bucket guard for LSH/blocking self-joins.
@@ -8,21 +9,25 @@ import org.apache.spark.sql.functions._
   * An LSH self-join on (band, sig) is quadratic INSIDE each bucket: one
   * degenerate signature (boilerplate or near-empty docs that all minhash
   * identically) produces an O(n²) bucket that AQE's skew-join splitting
-  * can mitigate but not bound — splitting a 10M-row bucket still emits
-  * 50T pairs. The standard production fix (used by every large-scale
-  * minhash dedup pipeline) is to drop buckets above a size threshold:
-  * a bucket that big is a degenerate signature, not a real near-dup
-  * cluster, and its pairs are noise.
+  * can mitigate but not bound. The standard fix is to drop buckets above
+  * a size threshold: a bucket that big is a degenerate signature, not a
+  * real near-dup cluster, and its pairs are noise. Rows whose bucket key
+  * holds a NULL never join, so both forms below keep them.
   *
-  * Shape: the per-key counts are aggregated (one partial-agg pass over
-  * the already-cached signature table), the over-threshold keys — a
-  * tiny set by construction — are broadcast, and the input is pruned
-  * with a broadcast anti-join. No extra shuffle of the data itself, and
-  * — deliberately — NO driver-side action: the guard is a pure plan
-  * transformation, so declaring a guarded query launches zero jobs
-  * (asserted by SkewGuardSpec's listener test). The previous design
-  * counted the hot keys eagerly to decide whether to join at all, which
-  * cost one extra job per declaration just to log.
+  * Where the guard runs:
+  *  - [[dropHotBucketsInBuild]] runs INSIDE a CacheOnce index build, for
+  *    the cached bucket tables whose every reader is guarded
+  *    (`dedup_bands`, `dedup_simhash_bands`, `mm_phash_bands`,
+  *    `dedup_semantic_assigned`). It is paid once per build; a trial
+  *    that hits the index runs no guard at all, and the stored table is
+  *    hash-partitioned on the bucket key, so the self-join over it needs
+  *    no exchange.
+  *  - [[dropHotBuckets]] runs above its input on every query: over the
+  *    uncached window-hash table (`DedupQueries.substrRanked`), and above
+  *    the `emb_lsh_buckets` cache, which `sim_topk_lsh` reads unguarded.
+  *
+  * Neither form fires a job at declaration (SkewGuardSpec's listener
+  * test): both are pure plan transformations.
   */
 object SkewGuard {
 
@@ -32,8 +37,10 @@ object SkewGuard {
   val DefaultMaxBucket = 100000L
 
   /** Remove rows belonging to join-key buckets with more than `maxBucket`
-    * rows. Identity on data whose buckets are all under the threshold
-    * (the anti-join's build side is empty). Lazy: builds the plan only. */
+    * rows: per-key counts are partially aggregated, the over-threshold
+    * keys (a tiny set by construction) are broadcast, and the input is
+    * pruned with a broadcast anti-join, so the data itself is not
+    * shuffled. Identity when every bucket is under the threshold. */
   def dropHotBuckets(df: DataFrame, keys: Seq[String],
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
     val hot = df.groupBy(keys.map(col): _*)
@@ -41,5 +48,21 @@ object SkewGuard {
       .filter(col("__bucket_n") > maxBucket)
       .select(keys.map(col): _*)
     df.join(broadcast(hot), keys, "left_anti")
+  }
+
+  /** The same rows as [[dropHotBuckets]], in one pass for an index build:
+    * a window count over `keys`, a filter to `≤ maxBucket`, then a sort
+    * within partitions by `sortBy`. The window's exchange leaves the
+    * output hash-partitioned on `keys`. The sort restores an id-major
+    * row order inside each partition: after the bucket shuffle the id
+    * column no longer delta-compresses in the columnar cache (measured
+    * on `dedup_bands`: +15% bytes without it). */
+  def dropHotBucketsInBuild(df: DataFrame, keys: Seq[String], sortBy: Seq[String],
+      maxBucket: Long = DefaultMaxBucket): DataFrame = {
+    val nullKey: Column = keys.map(k => col(k).isNull).reduce(_ || _)
+    df.withColumn("__bucket_n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("__bucket_n") <= maxBucket || nullKey)
+      .drop("__bucket_n")
+      .sortWithinPartitions(sortBy.map(col): _*)
   }
 }

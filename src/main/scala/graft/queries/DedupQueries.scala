@@ -41,35 +41,33 @@ object DedupQueries {
     * functions — at 100 TB the hashing dominates the scan stage, so this
     * 16× reuse is the difference between CPU-bound and IO-bound. */
   private def bandTable(s: SparkSession, d: String): DataFrame = {
-    val withSigs = table(s, d, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), Portable.shingles3FromTokens(col("toks")).as("sh"))
-      .select(col("doc_id"), Portable.shingleHashes(col("sh")).as("hs"))
-      // all 16 minhashes fused into one codegen'd pass over the shared
-      // shingle hashes (plans/MinHash16.scala — bit-identical to the
-      // composed array_min form the oracle mirrors)
-      .select(col("doc_id"), expr("graft_minhash16(hs)").as("mh"))
-    val bandSigs: Seq[Column] = (0 until Bands).map { b =>
-      concat_ws("_", (0 until Rows).map(r => element_at(col("mh"), b * Rows + r + 1)): _*)
-    }
-    // cached (swap semantics): the self-join consumes this twice — without
-    // the cache every signature (md5 over all shingles) is computed twice.
-    // SkewGuard drops degenerate mega-buckets before any self-join (inert
-    // at test SF; bounds the quadratic blowup at 100 TB). The threshold
-    // is conf-driven (r21, r20 verdict #5) so the engaged path is
-    // TESTABLE: SkewGuardSpec lowers it over a boilerplate-heavy fixture
-    // and proves the anti-join both fires and leaves sub-threshold pairs
-    // bit-identical; the default is the same DefaultMaxBucket constant
-    // as before, so every declared result is unchanged. The guard sits
-    // ABOVE the cache, so a conf change never thrashes the swap.
+    // cached: the self-join consumes this twice — without the cache every
+    // signature (md5 over all shingles) is computed twice. SkewGuard
+    // drops degenerate mega-buckets inside the build (inert at test SF;
+    // bounds the quadratic blowup at 100 TB), so a trial that hits the
+    // index runs no guard. The threshold is conf-driven so the engaged
+    // path is testable (SkewGuardSpec lowers it over a boilerplate-heavy
+    // fixture); it is a dep of the key, so changing it rebuilds.
     val maxBucket = s.conf
       .get("spark.graft.dedup.maxBand", graft.functions.SkewGuard.DefaultMaxBucket.toString)
       .toLong
-    graft.functions.SkewGuard.dropHotBuckets(
-      graft.functions.CacheOnce.swap("dedup_bands",
-        withSigs.select(col("doc_id"), posexplode(array(bandSigs: _*)).as(Seq("band", "sig")))),
-      Seq("band", "sig"), maxBucket)
+    graft.functions.CacheOnce.get("dedup_bands", s, d, maxBucket) {
+      val withSigs = table(s, d, "documents")
+        .select(col("doc_id"), split(col("text"), " ").as("toks"))
+        .filter(size(col("toks")) >= 3)
+        .select(col("doc_id"), Portable.shingles3FromTokens(col("toks")).as("sh"))
+        .select(col("doc_id"), Portable.shingleHashes(col("sh")).as("hs"))
+        // all 16 minhashes fused into one codegen'd pass over the shared
+        // shingle hashes (plans/MinHash16.scala — bit-identical to the
+        // composed array_min form the oracle mirrors)
+        .select(col("doc_id"), expr("graft_minhash16(hs)").as("mh"))
+      val bandSigs: Seq[Column] = (0 until Bands).map { b =>
+        concat_ws("_", (0 until Rows).map(r => element_at(col("mh"), b * Rows + r + 1)): _*)
+      }
+      graft.functions.SkewGuard.dropHotBucketsInBuild(
+        withSigs.select(col("doc_id"), posexplode(array(bandSigs: _*)).as(Seq("band", "sig"))),
+        Seq("band", "sig"), Seq("doc_id", "band"), maxBucket)
+    }
   }
 
   /** DuckDB CTEs mirroring bandTable (same hash-once structure). */
@@ -209,39 +207,38 @@ object DedupQueries {
     * corpus-scaled K, skew-guarded and cache-shared — the block
     * `dedup_semantic` and `pipeline_dedup_provenance` both prune
     * within. Output: (vec_id, cluster, embedding). */
-  private def semanticAssigned(s: SparkSession, d: String): DataFrame = {
-    val nonZero = aggregate(
-      transform(col("embedding"), x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x) > 0.0
-    val emb = table(s, d, "embeddings")
-      .filter(nonZero).select(col("vec_id"), col("embedding"))
-    val kRow = emb.agg(greatest(
-      ceil(count(lit(1)) / lit(SemClusterTarget.toDouble)), lit(8L)).as("k"))
-    val cents = emb.crossJoin(broadcast(kRow))
-      .filter(col("vec_id") < col("k"))
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val assigned = emb.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("cid"),
-        round(T.cosineFast(col("embedding"), col("cvec")), 6).as("cs"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cs"), (-col("cid")).as("nc"))).as("cluster"),
-        first(col("embedding")).as("embedding"))
-    graft.functions.SkewGuard.dropHotBuckets(
-      graft.functions.CacheOnce.swap("dedup_semantic_assigned", assigned),
-      Seq("cluster"))
-  }
+  private def semanticAssigned(s: SparkSession, d: String): DataFrame =
+    graft.functions.CacheOnce.get("dedup_semantic_assigned", s, d) {
+      val nonZero = aggregate(
+        transform(col("embedding"), x => x.cast("double") * x.cast("double")),
+        lit(0.0), (acc, x) => acc + x) > 0.0
+      val emb = table(s, d, "embeddings")
+        .filter(nonZero).select(col("vec_id"), col("embedding"))
+      val kRow = emb.agg(greatest(
+        ceil(count(lit(1)) / lit(SemClusterTarget.toDouble)), lit(8L)).as("k"))
+      val cents = emb.crossJoin(broadcast(kRow))
+        .filter(col("vec_id") < col("k"))
+        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val assigned = emb.crossJoin(broadcast(cents))
+        .select(col("vec_id"), col("embedding"), col("cid"),
+          round(T.cosineFast(col("embedding"), col("cvec")), 6).as("cs"))
+        .groupBy(col("vec_id"))
+        .agg(max_by(col("cid"), struct(col("cs"), (-col("cid")).as("nc"))).as("cluster"),
+          first(col("embedding")).as("embedding"))
+      graft.functions.SkewGuard.dropHotBucketsInBuild(assigned, Seq("cluster"), Seq("vec_id"))
+    }
 
   /** Shared gram table of dedup_containment (cached; array_compact
     * retypes hs to containsNull=false so the graft_overlap64
     * null-element guard compiles out of the verify stage — see
     * dedup_ngram_jaccard). */
-  private[graft] def containGrams(s: SparkSession, d: String): DataFrame = {
-    val g = table(s, d, "documents")
-      .select(col("doc_id"), col("source"), T.charNgrams(col("text")).as("ng"))
-      .withColumn("hs",
-        array_sort(array_compact(transform(col("ng"), x => Portable.stableHash64(x)))))
-    graft.functions.CacheOnce.swap("dedup_contain_ngrams", g)
-  }
+  private[graft] def containGrams(s: SparkSession, d: String): DataFrame =
+    graft.functions.CacheOnce.get("dedup_contain_ngrams", s, d) {
+      table(s, d, "documents")
+        .select(col("doc_id"), col("source"), T.charNgrams(col("text")).as("ng"))
+        .withColumn("hs",
+          array_sort(array_compact(transform(col("ng"), x => Portable.stableHash64(x)))))
+    }
 
   /** dedup_containment's candidate stage BEFORE the distinct: one
     * (doc_a, doc_b) row per surviving gram-level match. Factored out
@@ -273,8 +270,11 @@ object DedupQueries {
     *    instead of the FULL 881k-row index; degrades to the same
     *    shuffled plan at cluster scale either way. */
   private[graft] def containCandRaw(s: SparkSession, d: String): DataFrame = {
-    val ranked = graft.functions.CacheOnce.swap("dedup_contain_idx",
-      rarityRanked(containGrams(s, d), Seq("source")))
+    val grams = containGrams(s, d)
+    val hot = hotDf(s)
+    val ranked = graft.functions.CacheOnce.get("dedup_contain_idx", s, d, hot, grams) {
+      rarityRanked(grams, Seq("source"), hot)
+    }
     val index =
       ranked.select(col("doc_id"), col("source"), col("h"), col("rn"), col("n"))
     val probe =
@@ -290,10 +290,13 @@ object DedupQueries {
         greatest(col("p.doc_id"), col("i.doc_id")).as("doc_b"))
   }
 
-  private def rarityRanked(g: DataFrame, extra: Seq[String]): DataFrame = {
-    val hotDf = g.sparkSession.conf
-      .get("spark.graft.dedup.hotDf", graft.functions.SkewGuard.DefaultMaxBucket.toString)
-      .toLong
+  /** Gram document-frequency ceiling of [[rarityRanked]]; a dep of every
+    * key built over it. */
+  private def hotDf(s: SparkSession): Long = s.conf
+    .get("spark.graft.dedup.hotDf", graft.functions.SkewGuard.DefaultMaxBucket.toString)
+    .toLong
+
+  private def rarityRanked(g: DataFrame, extra: Seq[String], hotDf: Long): DataFrame = {
     val grams = g.select(
       (col("doc_id") +: extra.map(col)) ++
         Seq(size(col("hs")).as("n"), explode(col("hs")).as("h")): _*)
@@ -530,20 +533,23 @@ object DedupQueries {
         // graft_overlap64 call in the per-candidate-pair verify loop
         // (plans/Overlap64.scala) — one pass at array-build time buys
         // two saved passes per candidate pair
-        val g = table(s, d, "documents")
-          .select(col("doc_id"), col("source"),
-            (length(col("text")) / lit(64)).cast("long").as("len_bkt"),
-            T.charNgrams(col("text")).as("ng"))
-          .withColumn("hs",
-            array_sort(array_compact(transform(col("ng"), x => Portable.stableHash64(x)))))
-        val gc = graft.functions.CacheOnce.swap("dedup_ngrams", g)
+        val gc = graft.functions.CacheOnce.get("dedup_ngrams", s, d) {
+          table(s, d, "documents")
+            .select(col("doc_id"), col("source"),
+              (length(col("text")) / lit(64)).cast("long").as("len_bkt"),
+              T.charNgrams(col("text")).as("ng"))
+            .withColumn("hs",
+              array_sort(array_compact(transform(col("ng"), x => Portable.stableHash64(x)))))
+        }
         // prefix = the floor(n/2)+1 RAREST grams of each doc (df-asc
         // order; hot grams excluded by rarityRanked's gram-level rule)
-        val prefix = graft.functions.CacheOnce.swap("dedup_ngrams_pf",
-          rarityRanked(gc, Seq("source", "len_bkt"))
+        val hot = hotDf(s)
+        val prefix = graft.functions.CacheOnce.get("dedup_ngrams_pf", s, d, hot, gc) {
+          rarityRanked(gc, Seq("source", "len_bkt"), hot)
             .filter(col("rn") <= floor(col("n") / 2) + 1)
             .select(col("doc_id"), col("source"), col("len_bkt"),
-              col("h"), col("rn"), col("n")))
+              col("h"), col("rn"), col("n"))
+        }
         // positional filter (PPJoin): a match at ranks (rn_a, rn_b) can
         // support at most 1 + min(remaining_a, remaining_b) common grams;
         // J >= 0.5 needs >= ceil(max(n_a,n_b)/2), and a qualifying pair's
@@ -776,22 +782,24 @@ object DedupQueries {
     // (pigeonhole), so candidates come from an equi-join, never all-pairs.
     Q("dedup_simhash_hamming",
       (s, d) => {
-        // staged token hashes (see dedup_simhash): one md5 pass, 16
-        // nearly-free bit votes — pays off at the cache BUILD, the only
-        // place this projection runs
-        val sigs = table(s, d, "documents")
-          .select(col("doc_id"),
-            transform(array_distinct(T.tokens(col("text"))),
-              t => Portable.stableHash64(t)).as("th"))
-          .select(col("doc_id"), T.simhashOfHashes(col("th")).as("sig"))
-        val banded = sigs.select(col("doc_id"), col("sig"),
-          posexplode(array(
-            col("sig").bitwiseAND(lit(63L)),
-            shiftright(col("sig"), 6).bitwiseAND(lit(31L)),
-            shiftright(col("sig"), 11).bitwiseAND(lit(31L))))
-            .as(Seq("band", "bsig")))
-        val bandedC = graft.functions.SkewGuard.dropHotBuckets(
-          graft.functions.CacheOnce.swap("dedup_simhash_bands", banded), Seq("band", "bsig"))
+        val bandedC = graft.functions.CacheOnce.get("dedup_simhash_bands", s, d) {
+          // staged token hashes (see dedup_simhash): one md5 pass, 16
+          // nearly-free bit votes — pays off at the cache BUILD, the only
+          // place this projection runs
+          val sigs = table(s, d, "documents")
+            .select(col("doc_id"),
+              transform(array_distinct(T.tokens(col("text"))),
+                t => Portable.stableHash64(t)).as("th"))
+            .select(col("doc_id"), T.simhashOfHashes(col("th")).as("sig"))
+          val banded = sigs.select(col("doc_id"), col("sig"),
+            posexplode(array(
+              col("sig").bitwiseAND(lit(63L)),
+              shiftright(col("sig"), 6).bitwiseAND(lit(31L)),
+              shiftright(col("sig"), 11).bitwiseAND(lit(31L))))
+              .as(Seq("band", "bsig")))
+          graft.functions.SkewGuard.dropHotBucketsInBuild(
+            banded, Seq("band", "bsig"), Seq("doc_id", "band"))
+        }
         bandedC.as("a").join(bandedC.as("b"),
           col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig")
             && col("a.doc_id") < col("b.doc_id"))
@@ -815,11 +823,9 @@ object DedupQueries {
     // signs): shuffle on bucket, pairwise strictly inside the bucket.
     Q("dedup_cosine",
       (s, d) => {
+        // guarded above the cache: sim_topk_lsh reads the same key unguarded
         val e = graft.functions.SkewGuard.dropHotBuckets(
-          graft.functions.CacheOnce.swap("emb_lsh_buckets",
-            table(s, d, "embeddings")
-              .select(col("vec_id"), col("embedding"), T.lshBucket(col("embedding")).as("bucket"))),
-          Seq("bucket"))
+          SimilarityQueries.lshBuckets(s, d), Seq("bucket"))
         e.as("a").join(e.as("b"),
           col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),

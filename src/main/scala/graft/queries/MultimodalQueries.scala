@@ -174,21 +174,23 @@ object MultimodalQueries {
     Q("mm_dedup_phash",
       (s, d) => {
         import graft.functions.{TextFunctions => T}
-        val sigs = table(s, d, "documents")
-          .select(col("doc_id"),
-            T.charNgrams(hex(encode(col("text"), "UTF-8")), 8).as("grams"))
-          // hash grams ONCE; the 16 bit-votes reuse the staged hashes
-          .select(col("doc_id"),
-            transform(col("grams"), g => Portable.stableHash64(g)).as("hs"))
-          .select(col("doc_id"), T.simhashOfHashes(col("hs")).as("sig"))
-        val banded = sigs.select(col("doc_id"), col("sig"),
-          posexplode(array(
-            col("sig").bitwiseAND(lit(63L)),
-            shiftright(col("sig"), 6).bitwiseAND(lit(31L)),
-            shiftright(col("sig"), 11).bitwiseAND(lit(31L))))
-            .as(Seq("band", "bsig")))
-        val bandedC = graft.functions.SkewGuard.dropHotBuckets(
-          graft.functions.CacheOnce.swap("mm_phash_bands", banded), Seq("band", "bsig"))
+        val bandedC = graft.functions.CacheOnce.get("mm_phash_bands", s, d) {
+          val sigs = table(s, d, "documents")
+            .select(col("doc_id"),
+              T.charNgrams(hex(encode(col("text"), "UTF-8")), 8).as("grams"))
+            // hash grams ONCE; the 16 bit-votes reuse the staged hashes
+            .select(col("doc_id"),
+              transform(col("grams"), g => Portable.stableHash64(g)).as("hs"))
+            .select(col("doc_id"), T.simhashOfHashes(col("hs")).as("sig"))
+          val banded = sigs.select(col("doc_id"), col("sig"),
+            posexplode(array(
+              col("sig").bitwiseAND(lit(63L)),
+              shiftright(col("sig"), 6).bitwiseAND(lit(31L)),
+              shiftright(col("sig"), 11).bitwiseAND(lit(31L))))
+              .as(Seq("band", "bsig")))
+          graft.functions.SkewGuard.dropHotBucketsInBuild(
+            banded, Seq("band", "bsig"), Seq("doc_id", "band"))
+        }
         bandedC.as("a").join(bandedC.as("b"),
           col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig")
             && col("a.doc_id") < col("b.doc_id"))

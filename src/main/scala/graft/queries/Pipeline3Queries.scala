@@ -57,10 +57,11 @@ object Pipeline3Queries {
     // tables. Without the cache every trial re-ran this subtree's
     // aggregate TWICE (once under pqCodes, once under the query lut) at
     // ~0.2-0.4 s of AQE stage rounds each (measured, tools/PqProbe).
-    graft.functions.CacheOnce.swap("pq_cb_row",
+    graft.functions.CacheOnce.get("pq_cb_row", s, d) {
       table(s, d, "embeddings").filter(col("vec_id") < 4)
         .select(col("vec_id"), subsMatrix.as("subs"))
-        .groupBy().agg(cbs.head, cbs.tail: _*))
+        .groupBy().agg(cbs.head, cbs.tail: _*)
+    }
   }
 
   /** Per-query 32-slot ADC lookup array: lut[cj*4 + code + 1] =
@@ -114,14 +115,16 @@ object Pipeline3Queries {
     // system keeps resident. Encode/search/ivfpq all read this one
     // table; the 32 graft_intl2 evaluations per vector run at the
     // session's first touch instead of once per trial.
-    graft.functions.CacheOnce.swap("pq_codes",
+    val cb = pqCodebookRow(s, d)
+    graft.functions.CacheOnce.get("pq_codes", s, d, cb) {
       table(s, d, "embeddings")
-        .crossJoin(broadcast(pqCodebookRow(s, d)))
+        .crossJoin(broadcast(cb))
         .select(Seq(col("vec_id"), col("label")) ++
           (0 to 7).map(j => subJ(j).as(s"sub_$j")) ++
           (0 to 3).map(c => col(s"cb_$c")): _*)
         .select(Seq(col("vec_id"), col("label")) ++
-          (0 to 7).map(j => mJ(j).as(s"m_$j")): _*))
+          (0 to 7).map(j => mJ(j).as(s"m_$j")): _*)
+    }
   }
 
   /** DuckDB CTEs mirroring the subvector decomposition, codebook and

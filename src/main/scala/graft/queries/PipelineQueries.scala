@@ -26,9 +26,8 @@ object PipelineQueries {
     Q("text_tfidf", bench = true,
       fn = (s, d) => {
         // the (doc_id, token) tf aggregate is THE shared signature table
-        // of the text family (built by RetrievalQueries.tfIndex — both
-        // scorers must register the identical plan or CacheOnce would
-        // swap-thrash); r21 folded dl, n_docs and avgdl into it and
+        // of the text family (built by RetrievalQueries.tfIndex, the one
+        // builder of its key); r21 folded dl, n_docs and avgdl into it and
         // token-partitioned it, and promoted the full-vocabulary df
         // aggregate to its own index table built from the cached tf.
         // This trial path now launches ZERO broadcast builds and ZERO

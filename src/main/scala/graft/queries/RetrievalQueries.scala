@@ -54,34 +54,41 @@ object RetrievalQueries {
     *    fence); bm25 broadcasts only the ≤|terms| rows surviving its
     *    literal term filter.
     *
-    * Both scorers must register byte-identical plans (CacheOnce swaps on
-    * sameResult — two spellings would thrash the cache every trial), so
-    * the builders live here and PipelineQueries.text_tfidf calls them. */
+    * Both scorers read the same keys through these builders (one
+    * builder per key: a CacheOnce hit does not compare plans). The
+    * repartition count is the session's shuffle partitions, so it is a
+    * dep of both keys; text_df also depends on the text_tf DataFrame it
+    * is built from, so it rebuilds whenever text_tf does. */
   private[queries] def tfIndex(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val ts = table(s, d, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("ts"))
-    val tf = ts
-      .select(col("doc_id"), size(col("ts")).cast("long").as("dl"),
-        explode(col("ts")).as("token"))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    // corpus stats: n_docs and the BM25 average-length scale, exactly
-    // the old per-trial st aggregate (n_docs = docs with >= 1 token =
-    // all docs — split() never returns an empty array; avgdl over the
-    // same set), computed once at build time
-    val st = ts.select(size(col("ts")).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n_docs"),
-        expr("(sum(dl) * 1000) div count(1)").as("avgdl_milli"))
-    graft.functions.CacheOnce.swap("text_tf",
-      tf.repartition(s.sessionState.conf.numShufflePartitions, col("token"))
-        .crossJoin(broadcast(st)))
+    val parts = s.sessionState.conf.numShufflePartitions
+    graft.functions.CacheOnce.get("text_tf", s, d, parts) {
+      val ts = table(s, d, "documents")
+        .select(col("doc_id"), split(col("text"), " ").as("ts"))
+      val tf = ts
+        .select(col("doc_id"), size(col("ts")).cast("long").as("dl"),
+          explode(col("ts")).as("token"))
+        .groupBy(col("doc_id"), col("token"))
+        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+      // corpus stats: n_docs and the BM25 average-length scale, exactly
+      // the old per-trial st aggregate (n_docs = docs with >= 1 token =
+      // all docs — split() never returns an empty array; avgdl over the
+      // same set), computed once at build time
+      val st = ts.select(size(col("ts")).cast("long").as("dl"))
+        .agg(count(lit(1)).as("n_docs"),
+          expr("(sum(dl) * 1000) div count(1)").as("avgdl_milli"))
+      tf.repartition(parts, col("token")).crossJoin(broadcast(st))
+    }
   }
 
   private[queries] def dfIndex(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    graft.functions.CacheOnce.swap("text_df",
-      tfIndex(s, d).groupBy(col("token")).agg(count(lit(1)).as("df")))
+      d: String): org.apache.spark.sql.DataFrame = {
+    val tf = tfIndex(s, d)
+    graft.functions.CacheOnce.get("text_df", s, d,
+        s.sessionState.conf.numShufflePartitions, tf) {
+      tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    }
+  }
 
   val all: Seq[Q] = Seq(
 

@@ -20,6 +20,16 @@ object SimilarityQueries {
 
   private val K = 5
 
+  /** (vec_id, embedding, bucket): the random-hyperplane LSH bucket of
+    * every embedding, cached under one key that `sim_topk_lsh` and
+    * `dedup_cosine` both read. */
+  private[queries] def lshBuckets(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    graft.functions.CacheOnce.get("emb_lsh_buckets", s, d) {
+      table(s, d, "embeddings")
+        .select(col("vec_id"), col("embedding"), T.lshBucket(col("embedding")).as("bucket"))
+    }
+
   /** Scale-safe per-query top-k over a scored (q_id, c_id, cos) set.
     *
     * A row_number window partitioned by q_id shuffles EVERY scored pair
@@ -93,12 +103,7 @@ object SimilarityQueries {
     // bucket — the fully data-independent scale path.
     Q("sim_topk_lsh",
       (s, d) => {
-        // same key as dedup_cosine: the bucket table is plan-identical, so
-        // sharing the key keeps ONE cached copy (a second persist of an
-        // equivalent plan would just WARN and alias it anyway)
-        val e = graft.functions.CacheOnce.swap("emb_lsh_buckets",
-          table(s, d, "embeddings")
-            .select(col("vec_id"), col("embedding"), T.lshBucket(col("embedding")).as("bucket")))
+        val e = lshBuckets(s, d)
         val q = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("q_id"), col("bucket").as("q_bucket"), col("embedding").as("q_vec"))
         val c = e.select(col("vec_id").as("c_id"), col("bucket").as("c_bucket"), col("embedding").as("c_vec"))

@@ -30,22 +30,24 @@ object Text2Queries {
 
     Q("text_rouge_pairs",
       (s, d) => {
-        val n = table(s, d, "documents").agg(count(lit(1)).as("corpus_n"))
-        val docs = table(s, d, "documents")
-          .select(col("doc_id"), split(col("text"), " ").as("w"))
-        val pairs = docs
-          .filter(Portable.stableHash64(col("doc_id")) % SampleMod === 0)
-          .crossJoin(broadcast(n))
-          .select(col("doc_id").as("ref_id"),
-            ((col("doc_id") + PartnerOff) % col("corpus_n")).as("cand_id"))
         // one row per (pair, side, gram) for unigrams and bigrams, then
         // clipped-count overlap per pair: Σ min(ref_cnt, cand_cnt)
-        // cached (swap semantics): three consumers (unigram overlap,
-        // bigram overlap, sizes) — without the cache each re-derives the
-        // sample joins from scratch
-        val withToks = graft.functions.CacheOnce.swap("rouge_wt", pairs
-          .join(docs.select(col("doc_id").as("ref_id"), col("w").as("wa")), "ref_id")
-          .join(docs.select(col("doc_id").as("cand_id"), col("w").as("wb")), "cand_id"))
+        // cached: three consumers (unigram overlap, bigram overlap,
+        // sizes) — without the cache each re-derives the sample joins
+        // from scratch
+        val withToks = graft.functions.CacheOnce.get("rouge_wt", s, d) {
+          val n = table(s, d, "documents").agg(count(lit(1)).as("corpus_n"))
+          val docs = table(s, d, "documents")
+            .select(col("doc_id"), split(col("text"), " ").as("w"))
+          val pairs = docs
+            .filter(Portable.stableHash64(col("doc_id")) % SampleMod === 0)
+            .crossJoin(broadcast(n))
+            .select(col("doc_id").as("ref_id"),
+              ((col("doc_id") + PartnerOff) % col("corpus_n")).as("cand_id"))
+          pairs
+            .join(docs.select(col("doc_id").as("ref_id"), col("w").as("wa")), "ref_id")
+            .join(docs.select(col("doc_id").as("cand_id"), col("w").as("wb")), "cand_id")
+        }
         def grams(w: org.apache.spark.sql.Column, nGram: Int) =
           if (nGram == 1) w
           else filter(

@@ -416,12 +416,13 @@ object TextQueries {
           transform(toks, t => split(trim(chain(t)), " +")),
           array().cast("array<string>"),
           (acc, x) => concat(acc, array(lit(" ")), x))
-        val enc = graft.functions.CacheOnce.swap("bpe_rt_enc",
+        val enc = graft.functions.CacheOnce.get("bpe_rt_enc", s, d) {
           table(s, d, "documents")
             .filter(size(toks) > 0)
             .select(col("doc_id"), syms.as("syms"),
               concat(lit(" "), array_join(transform(toks, t => lower(t)), " "))
-                .as("expected")))
+                .as("expected"))
+        }
         val vocab = enc.select(explode(col("syms")).as("sym")).distinct()
           .select(col("sym"), xxhash64(col("sym")).as("vid"))
         val decoded = enc
@@ -473,13 +474,14 @@ object TextQueries {
     Q("text_bpe_train",
       (s, d) => {
         import s.implicits._
-        val base = table(s, d, "documents")
-          .select(explode(filter(T.tokens(lower(col("text"))), t => length(t) > 0)).as("tok"))
-          .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-          .select(concat(lit(" "),
-            array_join(regexp_extract_all(col("tok"), lit("."), lit(0)), " "),
-            lit(" ")).as("sym"), col("n"))
-        var vocab = graft.functions.CacheOnce.swap("bpe_vocab_0", base)
+        var vocab = graft.functions.CacheOnce.get("bpe_vocab_0", s, d) {
+          table(s, d, "documents")
+            .select(explode(filter(T.tokens(lower(col("text"))), t => length(t) > 0)).as("tok"))
+            .groupBy(col("tok")).agg(count(lit(1)).as("n"))
+            .select(concat(lit(" "),
+              array_join(regexp_extract_all(col("tok"), lit("."), lit(0)), " "),
+              lit(" ")).as("sym"), col("n"))
+        }
         val learned = Seq.newBuilder[(Long, String, String, Long)]
         for (i <- 1 to BpeTrainSteps) {
           val best = vocab
@@ -494,9 +496,12 @@ object TextQueries {
             .limit(1).collect()(0)
           val (p1, p2, c) = (best.getString(0), best.getString(1), best.getLong(2))
           learned += ((i.toLong, p1, p2, c))
-          vocab = graft.functions.CacheOnce.swap(s"bpe_vocab_$i",
-            vocab.withColumn("sym",
-              replace(col("sym"), lit(s" $p1 $p2 "), lit(s" $p1$p2 "))))
+          // a step's vocabulary depends on the one it merges and the pair
+          val prev = vocab
+          vocab = graft.functions.CacheOnce.get(s"bpe_vocab_$i", s, d, prev, p1, p2) {
+            prev.withColumn("sym",
+              replace(col("sym"), lit(s" $p1 $p2 "), lit(s" $p1$p2 ")))
+          }
         }
         learned.result().toDF("step", "p1", "p2", "pair_count")
       },

@@ -1968,4 +1968,31 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges === 0, s"encode trial path re-grew an exchange: $exchanges")
     assert(scans === 0, s"encode trial path re-scans parquet: $scans")
   }
+
+  test("minhash LSH trial path: at most ONE exchange, zero file scans, no guard anti-join") {
+    // the hot-bucket guard runs inside the dedup_bands build, whose window
+    // leaves the cache hash-partitioned on (band, sig): the self-join
+    // rides it, and a trial that hits the index runs no guard aggregate
+    // or anti-join broadcast. The one exchange left is the pair count's.
+    // The anti-join is looked for in the plan AQE starts from too: AQE
+    // drops an anti-join whose hot-key side came back empty, but only
+    // after running the job that found it empty.
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val (exchanges, scans) = trialCounts("dedup_minhash_lsh")
+    assert(exchanges <= 1, s"minhash trial path re-grew an exchange: $exchanges")
+    assert(scans === 0, s"minhash trial path re-scans parquet: $scans")
+    val df = SparkEntry.queries("dedup_minhash_lsh")(spark, TestSpark.Sf)
+    df.collect()
+    val executed = df.queryExecution.executedPlan
+    val initial = executed match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan.collect { case p => p }
+      case _ => Seq.empty
+    }
+    val anti = (nodes(executed) ++ initial).collect {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j.nodeName
+    }
+    assert(anti.isEmpty, s"minhash trial path runs a guard anti-join: $anti")
+  }
 }
