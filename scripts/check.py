@@ -67,7 +67,13 @@ def main(sf_dir, out_dir):
             only_g = set(g) - set(e); only_e = set(e) - set(g)
             for r in list(only_g)[:2]: print(f"      only-spark : {r}")
             for r in list(only_e)[:2]: print(f"      only-oracle: {r}")
-    print(f"PASS {n_pass} FAIL {n_fail} (of {len(names)}, {len(oracle)} oracled)")
+    # a query that failed in Verify has no output dir; Verify records it
+    # in errors.json, and each entry counts as a failure
+    errors = json.load(open(f"{out_dir}/errors.json"))
+    for name, err in sorted(errors.items()):
+        print(f"  ✗ {name}: VERIFY {err['class']}: {err['message'][:200]}")
+        n_fail += 1
+    print(f"PASS {n_pass} FAIL {n_fail} (of {len(names) + len(errors)}, {len(oracle)} oracled)")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":

@@ -82,10 +82,9 @@ object Bench {
     (1 to 3).map(_ => once()).min
   }
 
-  /** Cumulative driver GC time across all collector beans (BenchProbe's
-    * diagnostic, promoted here for the 3× pass): a trial whose wall time
-    * inflates in step with its gcDelta names GC pressure as the cause; an
-    * inflated wall with flat GC points at neighbors/clock. */
+  /** Cumulative driver GC time across all collector beans: a trial whose
+    * wall time inflates in step with its gcDelta names GC pressure as the
+    * cause; an inflated wall with flat GC points at neighbors/clock. */
   private def gcMs(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -108,6 +107,10 @@ object Bench {
     * category error this split removes; the reading itself stays in the
     * artifact either way.) */
   val constInput3x: Set[String] = Set("graph_pagerank")
+
+  /** A 3× row is over when its wall exceeds this multiple of its sf0.1
+    * wall: 3× data × log-factor headroom. */
+  private val Over3x = 4.5
 
   /** Shared per-row trial policy (main pass and 3× pass use the SAME
     * rules, so their numbers are comparable):
@@ -312,11 +315,9 @@ object Bench {
     // collecting the main pass's garbage inside some row's window. The
     // wall ratio vs the row's sf0.1 time is reported; rows over the
     // threshold are named in "bench_3x_over" — reported, not crashed.
-    // Emitted only for the standard sf0.1 run; SPARK_GRAFT_BENCH_3X=0
-    // skips (dev iteration).
+    // Emitted only for the standard sf0.1 run.
     def bench3x(): (String, String) = try {
-      if (!sfDir.endsWith("sf0.1") ||
-        sys.env.get("SPARK_GRAFT_BENCH_3X").contains("0")) ("", "")
+      if (!sfDir.endsWith("sf0.1")) ("", "")
       else {
         val dir3 = ScaleFixture.dir(spark, sfDir)
         val base = results.collect { case r if r.reported > 0 => r.name -> r.reported }.toMap
@@ -333,14 +334,8 @@ object Bench {
         // reported; re-measured rows are named in
         // "bench_3x_remeasured", so a row that stays over after TWO
         // independent windows is a real scaling signal.
-        // threshold 4.5 = 3× data × log-factor headroom;
-        // SPARK_GRAFT_BENCH_3X_THRESH overrides it so the adjudication
-        // path itself is TESTABLE (set it below 1 and every row must
-        // appear in bench_3x_remeasured with a second fresh window)
-        val overThresh = sys.env.get("SPARK_GRAFT_BENCH_3X_THRESH")
-          .flatMap(_.toDoubleOption).getOrElse(4.5)
         def isOver(r: Row): Boolean =
-          r.reported >= 0 && base.get(r.name).exists(b => r.reported / b > overThresh)
+          r.reported >= 0 && base.get(r.name).exists(b => r.reported / b > Over3x)
         val remeasured = scala.collection.mutable.ArrayBuffer.empty[String]
         val rows = pass3.rows.map { row =>
           if (!isOver(row)) row
@@ -389,19 +384,9 @@ object Bench {
     // graft_overlap64 verify actually scores) makes draw-variance vs
     // code-regression decidable from the artifact alone.
     def containmentDiag(): String = try {
-      import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
-      val df = SparkEntry.queries("dedup_containment")(spark, sfDir)
-      // collect() (not a noop write) so execution flows through THIS
-      // DataFrame's QueryExecution — a write plans its own, leaving
-      // df.queryExecution's metrics at zero
-      df.collect()
-      val joinRows = plans.PlanWalk.nodes(df.queryExecution.executedPlan).collect {
-        case j: SortMergeJoinExec => j.metrics.get("numOutputRows")
-        case j: ShuffledHashJoinExec => j.metrics.get("numOutputRows")
-        case j: BroadcastHashJoinExec => j.metrics.get("numOutputRows")
-      }.flatten.map(_.value)
+      val joinRows = plans.PlanWalk.equiJoinRows(SparkEntry.queries("dedup_containment")(spark, sfDir))
       val candidates = joinRows.foldLeft(0L)(math.max)
-      val verifyRows = joinRows.headOption.getOrElse(0L) // pre-order: topmost join
+      val verifyRows = joinRows.headOption.getOrElse(0L)
       s""""containment_diag":{"candidates":$candidates,"verify_rows":$verifyRows},"""
     } catch { case e: Throwable => record("containment_diag", "containment_diag")(e); "" }
     val diag = containmentDiag()

@@ -18,7 +18,7 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** The master of Verify, Bench and BenchProbe:
+  /** The master of Verify, Bench and tools.Profile:
     * `local[$SPARK_GRAFT_CPUS]`, 32 cores when unset. */
   def localMaster: Option[String] =
     Some(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")

@@ -52,15 +52,21 @@ object Verify {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     val spark = Engine.session("graft-verify", Engine.localMaster)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // every failed query → {class, message}, written to errors.json
+    // ({} on a clean run) as well as printed
+    val errors = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only.exists(inSlice(_, name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(s"${jsonString(name)}: {\"class\": ${jsonString(e.getClass.getName)}, " +
+            s"\"message\": ${jsonString(String.valueOf(e.getMessage))}}")
+        }
       }
-    }
+    Files.writeString(Paths.get(s"$outDir/errors.json"), errors.mkString("{", ",", "}"))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -75,10 +75,6 @@ object Portable {
   def minhashValue(shingles: Column, i: Int): Column =
     minhashFromHashes(shingleHashes(shingles), i)
 
-  /** DuckDB equivalent over a list-of-varchar SQL expression. */
-  def minhashValueSql(shinglesExpr: String, i: Int): String =
-    minhashFromHashesSql(shingleHashesSql(shinglesExpr), i)
-
   /** Word 3-shingles from an ALREADY-MATERIALIZED tokens column.
     * Callers must stage `split(text, " ")` as its own projection first:
     * passing the split expression directly re-evaluates it inside every

@@ -1,17 +1,20 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** THE walk over an executed plan including every AQE-materialized
   * subtree (final adaptive plans, query stages, reused exchanges) —
   * the single shared copy for every metric reader and plan fence
-  * (Bench's containment diagnostics, ProfileContain, PlanSpec's
-  * exchange/join counts, ScaleGrowthSpec's join/broadcast volume
-  * fences). A Spark upgrade that adds a new wrapper node gets fixed
-  * HERE, not in four drifting copies. */
+  * (Bench's containment diagnostics, tools.Profile, PlanSpec's
+  * exchange/join counts, ScaleGrowthSpec's join volume fences). A Spark
+  * upgrade that adds a new wrapper node gets fixed HERE, not in drifting
+  * copies. */
 object PlanWalk {
+  /** Every node of `p`, pre-order (a node before its children). */
   def nodes(p: SparkPlan): Seq[SparkPlan] =
     (p +: p.children.flatMap(nodes)) ++ (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -19,4 +22,17 @@ object PlanWalk {
       case r: ReusedExchangeExec => nodes(r.child)
       case _ => Seq.empty
     })
+
+  /** Executes `df` with `collect()` and returns the `numOutputRows` of
+    * every sort-merge, shuffled-hash and broadcast-hash join in its
+    * executed plan, pre-order: the head is the topmost join. collect()
+    * (not a noop write, which plans its own QueryExecution) fills the
+    * metrics of THIS DataFrame's plan. */
+  def equiJoinRows(df: DataFrame): Seq[Long] = {
+    df.collect(): Unit
+    nodes(df.queryExecution.executedPlan).collect {
+      case j @ (_: SortMergeJoinExec | _: ShuffledHashJoinExec | _: BroadcastHashJoinExec) =>
+        j.metrics.get("numOutputRows")
+    }.flatten.map(_.value)
+  }
 }

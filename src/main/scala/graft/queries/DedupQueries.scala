@@ -232,7 +232,7 @@ object DedupQueries {
     * retypes hs to containsNull=false so the graft_overlap64
     * null-element guard compiles out of the verify stage — see
     * dedup_ngram_jaccard). */
-  private[graft] def containGrams(s: SparkSession, d: String): DataFrame =
+  private def containGrams(s: SparkSession, d: String): DataFrame =
     graft.functions.CacheOnce.get("dedup_contain_ngrams", s, d) {
       table(s, d, "documents")
         .select(col("doc_id"), col("source"), T.charNgrams(col("text")).as("ng"))
@@ -241,13 +241,11 @@ object DedupQueries {
     }
 
   /** dedup_containment's candidate stage BEFORE the distinct: one
-    * (doc_a, doc_b) row per surviving gram-level match. Factored out
-    * (r21) so tools/FunnelDiag can measure the match-multiplicity split
-    * the r20 verdict #3 asked for — which share of the raw matches
-    * belongs to pairs the verify will ANSWER (untouchable by any
-    * recall-exact pair-level filter) vs to pairs it will reject (the
-    * PPJoin+ suffix-filter headroom) — against the query's own plan,
-    * not a copy that could drift.
+    * (doc_a, doc_b) row per surviving gram-level match. The r21
+    * match-multiplicity split (which share of the raw matches belongs
+    * to pairs the verify will ANSWER vs to pairs it will reject — the
+    * PPJoin+ suffix-filter headroom) was measured on this stage
+    * (OPTIMIZATION_r21.md, "dedup_containment — funnel split measured").
     *
     * Blocking/filters (the r13–r20 lineage, comments preserved):
     *  - probe = the floor(n/2)+1 RAREST grams of each doc (df-asc
@@ -269,7 +267,7 @@ object DedupQueries {
     *    (444k rows at sf0.1, the strictly smaller side by construction)
     *    instead of the FULL 881k-row index; degrades to the same
     *    shuffled plan at cluster scale either way. */
-  private[graft] def containCandRaw(s: SparkSession, d: String): DataFrame = {
+  private def containCandRaw(s: SparkSession, d: String): DataFrame = {
     val grams = containGrams(s, d)
     val hot = hotDf(s)
     val ranked = graft.functions.CacheOnce.get("dedup_contain_idx", s, d, hot, grams) {
@@ -668,7 +666,7 @@ object DedupQueries {
         // Joined twice through the SAME un-renamed subtree under plain
         // aliases — one fewer rename projection per side, and the two
         // broadcast subtrees canonicalize identically. NOTE (r20,
-        // measured with tools/ReuseCheck): AQE stage-level broadcast
+        // measured; OPTIMIZATION_r20.md): AQE stage-level broadcast
         // reuse still does NOT fire here — each cached-table occurrence
         // gets its own TableCacheQueryStage in Spark 4.1 and the
         // exchanges above them stay distinct (3 builds, 0

@@ -14,10 +14,10 @@ package graft.queries
   * here, in code review, instead of being discovered by a judge (how
   * pipe_bloom_prefilter's sizing count surfaced in round 15).
   *
-  * The entries were measured, not guessed: tools/EagerProbe declares all
-  * 721 rows twice (warm + probe) and prints the steady-state eager set;
-  * this file is that output, grouped by the mechanism that makes each
-  * family eager.
+  * The entries were measured, not guessed: SkewGuardSpec's census
+  * declares every row twice (warm + probe) and fails on any difference
+  * from this set; this file groups that set by the mechanism that makes
+  * each family eager.
   *
   * r18 AUDIT (r17 verdict #5 — can any remaining entry move its proof to
   * execution time the way sort_global/cache_columnar/misc_observe did in

@@ -45,10 +45,10 @@ object Pipeline3Queries {
     * matrix → ONE global aggregate — instead of the r21-draft
     * explode(8×)→per-subspace pivot→collect_list pack, whose THREE
     * aggregate/exchange levels cost ~0.5-0.8 s of AQE stage rounds per
-    * trial for 32 rows (measured, tools/PqProbe) — fixed driver-side
+    * trial for 32 rows (measured; OPTIMIZATION_r21.md) — fixed driver-side
     * overhead that also showed up as the 8-core-faster-than-32
     * inversion class. */
-  private[graft] def pqCodebookRow(s: SparkSession, d: String): DataFrame = {
+  private def pqCodebookRow(s: SparkSession, d: String): DataFrame = {
     val cbs = (0 to 3).map(c =>
       min(when(col("vec_id") === c, col("subs"))).as(s"cb_$c"))
     // CacheOnce: the codebook is the trained half of a PQ INDEX (FAISS
@@ -56,7 +56,7 @@ object Pipeline3Queries {
     // once per session like the dedup gram index and the text posting
     // tables. Without the cache every trial re-ran this subtree's
     // aggregate TWICE (once under pqCodes, once under the query lut) at
-    // ~0.2-0.4 s of AQE stage rounds each (measured, tools/PqProbe).
+    // ~0.2-0.4 s of AQE stage rounds each (measured; OPTIMIZATION_r21.md).
     graft.functions.CacheOnce.get("pq_cb_row", s, d) {
       table(s, d, "embeddings").filter(col("vec_id") < 4)
         .select(col("vec_id"), subsMatrix.as("subs"))
@@ -70,7 +70,7 @@ object Pipeline3Queries {
     * query vectors × the broadcast codebook row: zero aggregates, zero
     * exchanges in the broadcast subtree. `extra` carries pass-through
     * columns (ivfpq's coarse cell). */
-  private[graft] def pqQueryLut(s: SparkSession, d: String,
+  private[queries] def pqQueryLut(s: SparkSession, d: String,
       extra: Seq[(String, String)] = Seq.empty): DataFrame = {
     val lut = array((0 to 7).flatMap(j => (0 to 3).map(c =>
       call_function("graft_intl2", element_at(col("qsubs"), j + 1),
@@ -100,7 +100,7 @@ object Pipeline3Queries {
     * encode path is now genuinely a pure projection, and search sums
     * its 8 lookups per candidate row (see sim_topk_pq). least() skips
     * NULL slots, matching the old inner join when a code id is absent. */
-  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame = {
+  private[queries] def pqCodes(s: SparkSession, d: String): DataFrame = {
     def subJ(j: Int) = transform(slice(col("embedding"), j * 8 + 1, 8),
       x => floor(x.cast("double") * 1000).cast("long"))
     def mJ(j: Int) = least((0 to 3).map(c =>

@@ -32,11 +32,11 @@ object RetrievalQueries {
     * per-doc length norms, and per-term docFreq side by side), so all
     * three are CacheOnce signature tables built once per session:
     *
-    *  - `text_tf` (doc_id, token, tf, dl, n_docs, avgdl_milli): the
+    *  - `text_tf` (doc_id, token, tf, dl, n_docs, dl_docs, avgdl_milli): the
     *    postings with the per-doc length FOLDED IN as a column (dl =
     *    Σ tf per doc ≡ the doc's token count, carried through the tf
     *    aggregate as max(dl) — no window, no second exchange) and the
-    *    two corpus constants attached by a 1-row broadcast cross join
+    *    three corpus constants attached by a 1-row broadcast cross join
     *    at BUILD time. This deletes bm25's per-trial dl join + its
     *    broadcast build AND the per-trial 1-row st aggregate job.
     *    The cache is REPARTITIONED BY token (explicit N = the session
@@ -70,13 +70,15 @@ object RetrievalQueries {
           explode(col("ts")).as("token"))
         .groupBy(col("doc_id"), col("token"))
         .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-      // corpus stats: n_docs and the BM25 average-length scale, exactly
-      // the old per-trial st aggregate (n_docs = docs with >= 1 token =
-      // all docs — split() never returns an empty array; avgdl over the
-      // same set), computed once at build time
-      val st = ts.select(size(col("ts")).cast("long").as("dl"))
-        .agg(count(lit(1)).as("n_docs"),
-          expr("(sum(dl) * 1000) div count(1)").as("avgdl_milli"))
+      // corpus stats, computed once at build time. n_docs counts every
+      // document (tfidf's N). BM25's N (dl_docs) and average length
+      // cover only the docs with >= 1 token: split() never returns an
+      // empty array, but a NULL text splits to NULL, explodes to no tf
+      // row, and its size is -1 with ANSI off, so its dl is NULL here
+      val st = ts
+        .select(when(col("ts").isNotNull, size(col("ts"))).cast("long").as("dl"))
+        .agg(count(lit(1)).as("n_docs"), count(col("dl")).as("dl_docs"),
+          expr("(sum(dl) * 1000) div count(dl)").as("avgdl_milli"))
       tf.repartition(parts, col("token")).crossJoin(broadcast(st))
     }
   }
@@ -93,6 +95,7 @@ object RetrievalQueries {
   val all: Seq[Q] = Seq(
 
     // BM25 (k1=1.2, b=0.75) in exact integer arithmetic:
+    //   N          = dl_docs, the docs with >= 1 token (the oracle's dl rows)
     //   idf        = (N * 1e6) div df                  (monotone integer idf)
     //   avgdl_milli= (total_tokens * 1e3) div N
     //   dlr        = (dl * 1e6) div avgdl_milli        (dl/avgdl in micro)
@@ -130,7 +133,7 @@ object RetrievalQueries {
         val dfQ = dfIndex(s, d).filter(col("token").isin(qTerms: _*))
         tf.join(broadcast(qt), col("token") === col("term"))
           .join(broadcast(dfQ), Seq("token"))
-          .withColumn("idf", expr("(n_docs * 1000000) div df"))
+          .withColumn("idf", expr("(dl_docs * 1000000) div df"))
           .withColumn("dlr", expr("(dl * 1000000) div avgdl_milli"))
           .withColumn("tfp",
             expr("(tf * 2200000) div (1000 * tf + 300 + (900 * dlr) div 1000)"))

@@ -3,23 +3,23 @@ package graft.tools
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
-/** Dev tool: stage-level timing of one declared query under the Bench
-  * session config — one warm-up pass, one timed pass, top stages by
-  * wall time with shuffle I/O, and the post-AQE plan. Usage:
-  * `runMain graft.tools.ProfileContain [queryName] [sfDir]`
-  * (defaults: dedup_containment at $SPARK_GRAFT_SF_DIR or sf0.1).
-  * This is how the r6 cache-thrash regression was found: the timed pass
-  * showed two parallel 3 s zero-shuffle stages racing to re-materialize
-  * the signature cache that CacheOnce had just unpersisted.
+/** Dev profiler for any declared query under the Bench session config:
+  * one warm-up pass, one timed pass, the top stages by wall time with
+  * shuffle I/O, the executed plan, the node metrics and the equi-join
+  * output rows (pre-order, so the head is the topmost join). Usage:
+  * `runMain graft.tools.Profile <query> [sfDir]` (sfDir defaults to
+  * $SPARK_GRAFT_SF_DIR, then sf0.1). BENCHNOTES.md ("Dev tools") maps
+  * the retired one-off probes to the readings they produced.
   */
-object ProfileContain {
+object Profile {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("dedup_containment")
+    val name = args.headOption.getOrElse(
+      sys.error("usage: runMain graft.tools.Profile <query> [sfDir]"))
+    val q = graft.SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
     val sfDir = args.drop(1).headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Engine.session("graft-profile-contain", Some("local[32]"))
-    val q = graft.SparkEntry.queries(name)
+    val spark = graft.Engine.session("graft-profile", graft.Engine.localMaster)
     q(spark, sfDir).write.format("noop").mode("overwrite").save() // warm-up
 
     val stages = mutable.ArrayBuffer.empty[(Int, Long, String, Long, Long)]
@@ -34,19 +34,19 @@ object ProfileContain {
     }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val df = q(spark, sfDir)
-    df.write.format("noop").mode("overwrite").save()
+    q(spark, sfDir).write.format("noop").mode("overwrite").save()
     val total = (System.nanoTime() - t0) / 1e9
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(1000)
+    // a noop WRITE plans its own QueryExecution, leaving the written
+    // DataFrame's adaptive plan unexecuted — equiJoinRows runs one
+    // collect() pass, so THIS df's plan is final and its metrics fill
+    val df = q(spark, sfDir)
+    val joinRows = graft.plans.PlanWalk.equiJoinRows(df)
     println(s"=== EXECUTED PLAN ($name) ===")
     println(df.queryExecution.executedPlan.toString.take(8000))
     println(s"=== NODE METRICS ($name) ===")
-    // a noop WRITE plans its own QueryExecution (metrics land there, not
-    // on df) — run one collect() pass so THIS df's metrics fill
-    val dfm = q(spark, sfDir)
-    dfm.collect(): Unit
-    graft.plans.PlanWalk.nodes(dfm.queryExecution.executedPlan).foreach { n =>
+    graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan).foreach { n =>
       val ms = n.metrics.collect {
         case (k, m) if m.value > 0 &&
           (k.contains("time") || k == "numOutputRows" || k.contains("numPartitions")) =>
@@ -55,6 +55,7 @@ object ProfileContain {
       if (ms.nonEmpty)
         println(s"  ${n.nodeName.take(40)}: ${ms.mkString(", ")}")
     }
+    println(s"EQUI-JOIN ROWS (pre-order): ${joinRows.mkString(", ")}")
     println(f"TOTAL: $total%.2f s")
     stages.sortBy(-_._2).take(15).foreach { case (id, ms, nm, sw, sr) =>
       println(f"stage $id%4d  ${ms / 1000.0}%7.2f s  shufW=${sw / 1e6}%8.1f MB shufR=${sr / 1e6}%8.1f MB  $nm")

@@ -14,7 +14,7 @@ class PlanSpec extends AnyFunSuite {
 
   /** Walk an executed plan INCLUDING AQE-materialized subtrees —
     * delegates to the single shared copy (graft.plans.PlanWalk, also
-    * used by Bench's diagnostics, ProfileContain and ScaleGrowthSpec). */
+    * used by Bench's diagnostics, tools.Profile and ScaleGrowthSpec). */
   private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.execution.SparkPlan] =
     graft.plans.PlanWalk.nodes(p)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression fence for the dedup stack's 100 TB contract: candidate
@@ -20,17 +19,8 @@ class ScaleGrowthSpec extends AnyFunSuite {
     * are not traversed (their builds are one-time linear passes);
     * broadcast nested-loop shapes (the K-row centroid fan-outs) are
     * out of scope for the candidate-volume contract. */
-  private def maxJoinRows(name: String, sf: String): Long = {
-    val df = SparkEntry.queries(name)(spark, sf)
-    df.collect() // fills the SQL metrics of this exact QueryExecution
-    graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-      .collect {
-        case j: SortMergeJoinExec => j.metrics.get("numOutputRows")
-        case j: ShuffledHashJoinExec => j.metrics.get("numOutputRows")
-        case j: BroadcastHashJoinExec => j.metrics.get("numOutputRows")
-      }
-      .flatten.map(_.value).foldLeft(0L)(math.max)
-  }
+  private def maxJoinRows(name: String, sf: String): Long =
+    graft.plans.PlanWalk.equiJoinRows(SparkEntry.queries(name)(spark, sf)).foldLeft(0L)(math.max)
 
   test("containment candidate volume tracks the answer, not the corpus squared") {
     // No blocking scheme can emit fewer candidates than TRUE results,
