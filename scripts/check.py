@@ -5,6 +5,10 @@ name, rows canonically sorted, floats normalized).
 
 Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
 (Dev-loop tool only — the real gate is the driver's harness.)
+
+<sfDir> is a testdata directory (each table one <t>.parquet file) or a
+Spark-written corpus such as the derived 3x fixture under
+/tmp/graft_scale (each table a <t>.parquet/ directory of part files).
 """
 import json, math, sys, os
 import duckdb
@@ -30,7 +34,10 @@ def canon(rows, cols):
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))

@@ -1,6 +1,8 @@
 package graft
 
+import graft.plans._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Engine façade: the session factory + catalog over the testdata layout.
   *
@@ -25,6 +27,17 @@ object Engine {
 
   private val LocalMaster = """local\[(\d+)\]""".r
 
+  /** The six native functions, reachable from SQL and `expr(...)`
+    * through the session's FunctionRegistry (SURVEY §2.7): name, arity,
+    * the argument list an arity error names, constructor. */
+  private val NativeFunctions: Seq[(String, Int, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_hamming64", 2, "2 arguments", e => Hamming64(e(0), e(1))),
+    ("graft_cosine", 2, "2 arguments", e => CosineSim(e(0), e(1))),
+    ("graft_topk", 3, "3 arguments (score, id, k)", e => TopKPairs(e(0), e(1), e(2))),
+    ("graft_minhash16", 1, "1 argument", e => MinHash16(e(0))),
+    ("graft_intl2", 2, "2 arguments", e => IntL2(e(0), e(1))),
+    ("graft_overlap64", 2, "2 arguments", e => Overlap64(e(0), e(1))))
+
   /** The one place a session is built. Everything a query relies on is
     * set here, at construction, so a run's result never depends on who
     * built the session or which query touched it first: the confs, the
@@ -46,10 +59,6 @@ object Engine {
       .enableHiveSupport()
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.ui.enabled", "false")
-      // the eager census attributes ~1500 job groups through the status
-      // store; retention must exceed that or early groups are evicted
-      // and an eager row reads as lazy
-      .config("spark.ui.retainedJobs", "20000")
       .config("spark.sql.ansi.enabled", "false") // 1.3 semantics: null, not error
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
@@ -76,9 +85,14 @@ object Engine {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import graft.plans._
-    Seq(Hamming64.register _, CosineSim.register _, TopKAgg.register _,
-      MinHash16.register _, IntL2.register _, Overlap64.register _).foreach(_(spark))
+    for ((name, arity, args, build) <- NativeFunctions)
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name,
+        { exprs: Seq[Expression] =>
+          if (exprs.length != arity)
+            throw new IllegalArgumentException(
+              s"$name requires exactly $args, got ${exprs.length}")
+          build(exprs)
+        }, "built-in")
     // session-scoped, so the rules run in the terminal "User Provided
     // Optimizers" batch, after RewriteDistinctAggregates (README, Sessions)
     spark.experimental.extraOptimizations = Seq(SimplifySelfHamming, LinearizeNullSafeCountAgg)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,17 +86,4 @@ case class CosineSim(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def toString: String = s"graft_cosine($left, $right)"
-}
-
-object CosineSim {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      { exprs: Seq[Expression] =>
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"graft_cosine requires exactly 2 arguments, got ${exprs.length}")
-        CosineSim(exprs(0), exprs(1))
-      },
-      "built-in")
 }

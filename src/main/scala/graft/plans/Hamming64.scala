@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -37,20 +36,4 @@ case class Hamming64(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def toString: String = s"graft_hamming64($left, $right)"
-}
-
-object Hamming64 {
-  /** Register `graft_hamming64` in the session's function registry so it
-    * is reachable from SQL and `expr(...)` — the FunctionRegistry surface
-    * of SURVEY §2.7 (catalyst/analysis/FunctionRegistry.scala:27). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hamming64",
-      { exprs: Seq[Expression] =>
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"graft_hamming64 requires exactly 2 arguments, got ${exprs.length}")
-        Hamming64(exprs(0), exprs(1))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,17 +82,4 @@ case class IntL2(left: Expression, right: Expression) extends BinaryExpression {
     copy(left = newLeft, right = newRight)
 
   override def toString: String = s"graft_intl2($left, $right)"
-}
-
-object IntL2 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_intl2",
-      { exprs: Seq[Expression] =>
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"graft_intl2 requires exactly 2 arguments, got ${exprs.length}")
-        IntL2(exprs(0), exprs(1))
-      },
-      "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.functions.Portable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -84,17 +83,4 @@ case class MinHash16(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): MinHash16 =
     copy(child = newChild)
-}
-
-object MinHash16 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash16",
-      { exprs: Seq[Expression] =>
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"graft_minhash16 requires exactly 1 argument, got ${exprs.length}")
-        MinHash16(exprs(0))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -133,17 +132,4 @@ case class Overlap64(left: Expression, right: Expression) extends BinaryExpressi
     copy(left = newLeft, right = newRight)
 
   override def toString: String = s"graft_overlap64($left, $right)"
-}
-
-object Overlap64 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_overlap64",
-      { exprs: Seq[Expression] =>
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"graft_overlap64 requires exactly 2 arguments, got ${exprs.length}")
-        Overlap64(exprs(0), exprs(1))
-      },
-      "built-in")
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -23,14 +23,15 @@ object PlanWalk {
       case _ => Seq.empty
     })
 
-  /** Executes `df` with `collect()` and returns the `numOutputRows` of
-    * every sort-merge, shuffled-hash and broadcast-hash join in its
-    * executed plan, pre-order: the head is the topmost join. collect()
-    * (not a noop write, which plans its own QueryExecution) fills the
-    * metrics of THIS DataFrame's plan. */
+  /** Executes `df` and returns the `numOutputRows` of every sort-merge,
+    * shuffled-hash and broadcast-hash join in its executed plan,
+    * pre-order: the head is the topmost join. It runs THIS DataFrame's
+    * QueryExecution (a noop write would plan its own) and drops each row
+    * on the executors, so no result reaches the driver. */
   def equiJoinRows(df: DataFrame): Seq[Long] = {
-    df.collect(): Unit
-    nodes(df.queryExecution.executedPlan).collect {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
+    nodes(qe.executedPlan).collect {
       case j @ (_: SortMergeJoinExec | _: ShuffledHashJoinExec | _: BroadcastHashJoinExec) =>
         j.metrics.get("numOutputRows")
     }.flatten.map(_.value)

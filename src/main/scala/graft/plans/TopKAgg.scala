@@ -2,7 +2,6 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -125,17 +124,4 @@ case class TopKPairs(
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): TopKPairs =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object TopKAgg {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      { exprs: Seq[Expression] =>
-        if (exprs.length != 3)
-          throw new IllegalArgumentException(
-            s"graft_topk requires exactly 3 arguments (score, id, k), got ${exprs.length}")
-        TopKPairs(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
 }

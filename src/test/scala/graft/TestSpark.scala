@@ -19,4 +19,12 @@ object TestSpark {
     s
   }
   val Sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the graft optimizer rules off, then restores them.
+    * The rules are session-wide, so callers run this leg alone. */
+  def withoutGraftRules[T](body: => T): T = {
+    val saved = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = Seq.empty
+    try body finally spark.experimental.extraOptimizations = saved
+  }
 }

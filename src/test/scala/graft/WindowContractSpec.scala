@@ -2,49 +2,16 @@ package graft
 
 import graft.queries.WindowContract
 import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The unpartitioned-window census (r16 verdict #5): EXACTLY the rows
-  * named in WindowContract.domainBounded declare a plan with an
-  * empty-partitionSpec Window — an unlisted row with one fails by name
-  * (the 100 TB single-task hazard must be declared with a boundedness
-  * rationale), and a listed row without one fails as a stale entry.
-  * Then every member's claim is EXECUTED: the window's child subplan is
-  * run at the driver's sf0.01 and its row count asserted under the
-  * member's declared bound — "domain-bounded" is measured, not prose.
-  */
+/** Every member of WindowContract.domainBounded has its claim EXECUTED:
+  * the child subplan of each unpartitioned window is run at the
+  * driver's SFs and its row count asserted under the member's declared
+  * bound — "domain-bounded" is measured, not prose. That EXACTLY these
+  * rows plan such a window is RegistrySpec's window census (r16
+  * verdict #5). */
 class WindowContractSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-
-  private def unpartitionedWindows(name: String, sf: String): Seq[Window] =
-    try {
-      // inline CTEs first: a Window inside a WITH clause is otherwise
-      // extracted with a dangling CTERelationRef, which cannot be
-      // executed as a standalone subplan (key-not-found at planning)
-      val analyzed = SparkEntry.queries(name)(spark, sf).queryExecution.analyzed
-      val inlined = org.apache.spark.sql.catalyst.optimizer
-        .InlineCTE(alwaysInline = true).apply(analyzed)
-      inlined.collect { case w: Window if w.partitionSpec.isEmpty => w }
-    } catch { case _: Throwable => Nil }
-
-  test("census: EXACTLY the declared domainBounded set plans unpartitioned windows") {
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val declared = WindowContract.domainBounded.keySet
-    val dead = declared -- names.toSet
-    assert(dead.isEmpty,
-      s"domainBounded names not in the registry (dead entries): ${dead.toSeq.sorted.mkString(", ")}")
-    val planned = names.filter(n => unpartitionedWindows(n, TestSpark.Sf).nonEmpty).toSet
-    val undeclared = (planned -- declared).toSeq.sorted
-    assert(undeclared.isEmpty,
-      "rows plan an unpartitioned Window but are NOT in WindowContract.domainBounded " +
-        "(declare with a boundedness rationale + bound, or partition the window): " +
-        undeclared.mkString(", "))
-    val stale = (declared -- planned).toSeq.sorted
-    assert(stale.isEmpty,
-      "domainBounded entries whose plan no longer contains an unpartitioned " +
-        s"Window (stale — remove them): ${stale.mkString(", ")}")
-  }
 
   test("boundedness: every member's unpartitioned-window input stays under its declared bound at BOTH driver SFs (r17 verdict #4)") {
     // Window preserves cardinality, so in a window STACK the deepest
@@ -58,7 +25,7 @@ class WindowContractSpec extends AnyFunSuite {
     // way every other fence in the repo is built to catch.
     for (sf <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       WindowContract.domainBounded.toSeq.sortBy(_._1).foreach { case (name, (why, bound)) =>
-        val ws = unpartitionedWindows(name, sf)
+        val ws = WindowContract.unpartitionedWindows(SparkEntry.queries(name)(spark, sf))
         assert(ws.nonEmpty, s"$name: no unpartitioned window at $sf (census drift?)")
         val counts = ws.map(w => GraftShim.ofRows(spark, w.child).count())
         info(f"$name%-24s $sf%-24s max input ${counts.max}%6d (bound $bound) — $why")
