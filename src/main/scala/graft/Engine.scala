@@ -108,7 +108,8 @@ object Engine {
     * schema inference fires a footer-read job per `spark.read.parquet`
     * call, so without the cache every query DECLARATION launched a job
     * (Verify declares 185 of them). With it, declaring a query builds a
-    * pure lazy plan — SkewGuardSpec asserts zero jobs at declaration. */
+    * pure lazy plan — RegistrySpec's eager census fails any row outside
+    * EagerContract.eagerByDesign that fires a job at declaration. */
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

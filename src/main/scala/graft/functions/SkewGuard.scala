@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   *    uncached window-hash table (`DedupQueries.substrRanked`), and above
   *    the `emb_lsh_buckets` cache, which `sim_topk_lsh` reads unguarded.
   *
-  * Neither form fires a job at declaration (SkewGuardSpec's listener
-  * test): both are pure plan transformations.
+  * Neither form fires a job at declaration (RegistrySpec's eager
+  * census): both are pure plan transformations.
   */
 object SkewGuard {
 

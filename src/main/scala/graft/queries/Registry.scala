@@ -43,6 +43,24 @@ object Registry {
   def arrStr(c: Column): Column =
     array_join(transform(c, x => x.cast("string")), "|")
 
+  /** Per-fixture scratch path for a source/sink round-trip: one dir per
+    * sf dir under /tmp/graft_io, so sf0.01 and sf0.1 runs never share
+    * output. */
+  def ioPath(d: String, name: String): String =
+    s"/tmp/graft_io/${d.replaceAll("[^a-zA-Z0-9]", "_")}/$name"
+
+  /** Run `body` with `confs` set on the session, restoring each key's
+    * previous value (or unsetting it) afterwards. Conf-variant rows must
+    * run EAGERLY inside the scope: a lazy DataFrame returned from it
+    * would plan under the restored confs. */
+  def withConfs[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
+    val saved = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, prev) =>
+      prev.fold(s.conf.unset(k))(v => s.conf.set(k, v)) }
+  }
+
   /** Drop a managed table AND its warehouse location — the location can
     * survive from a previous JVM whose in-memory catalog is gone, and
     * CTAS refuses to reuse it. Shared by every query that creates

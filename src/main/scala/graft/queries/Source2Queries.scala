@@ -3,7 +3,7 @@ package graft.queries
 import graft.Engine.table
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
-import Registry.sql
+import Registry.{ioPath, sql, withConfs}
 
 /** §2.1 continued — the two scan-time pruning/locality contracts that
   * decide fact-table cost at 100 TB and exist only in the modern engine
@@ -23,9 +23,6 @@ import Registry.sql
   */
 object Source2Queries {
 
-  private def tmp(d: String, name: String) =
-    s"/tmp/graft_io/${d.replaceAll("[^a-zA-Z0-9]", "_")}/$name"
-
   val all: Seq[Q] = Seq(
 
     // Dynamic partition pruning: orders written partitioned by
@@ -40,8 +37,8 @@ object Source2Queries {
     // surviving-partition aggregate.
     Q("src_dpp",
       (s, d) => {
-        val fact = tmp(d, "dpp_fact")
-        val dim = tmp(d, "dpp_dim")
+        val fact = ioPath(d, "dpp_fact")
+        val dim = ioPath(d, "dpp_dim")
         table(s, d, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
           .write.partitionBy("o_orderstatus").mode(SaveMode.Overwrite).parquet(fact)
@@ -221,7 +218,7 @@ object Source2Queries {
     // dynamicpruning expression lands in the BatchScan's RuntimeFilters.
     Q("src_dsv2_runtime_filter",
       (s, d) => {
-        val dim = tmp(d, "rtf_dim")
+        val dim = ioPath(d, "rtf_dim")
         val sq = s; import sq.implicits._
         Seq((7L, "skip"), (4242L, "pick"), (77777L, "pick")).toDF("id", "cls")
           .write.mode(SaveMode.Overwrite).parquet(dim)
@@ -245,7 +242,7 @@ object Source2Queries {
     // contract every 100 TB lake hits weekly.
     Q("sql_repair_table",
       (s, d) => {
-        val loc = tmp(d, "repair_tbl")
+        val loc = ioPath(d, "repair_tbl")
         Registry.rmTree(new java.io.File(loc))
         table(s, d, "orders").filter(col("o_orderstatus") === lit("F"))
           .select(col("o_orderkey"), col("o_totalprice"))
@@ -317,7 +314,7 @@ object Source2Queries {
     // partition trees.
     Q("src_file_options",
       (s, d) => {
-        val root = tmp(d, "opt_files")
+        val root = ioPath(d, "opt_files")
         Registry.rmTree(new java.io.File(root))
         table(s, d, "nation").filter(col("n_regionkey") < 2)
           .select(col("n_nationkey"), col("n_regionkey"))
@@ -351,7 +348,7 @@ object Source2Queries {
     // extract-to-share shape that predates every lakehouse export API.
     Q("sql_insert_overwrite_dir",
       (s, d) => {
-        val out = tmp(d, "iod_out")
+        val out = ioPath(d, "iod_out")
         table(s, d, "nation").createOrReplaceTempView("graft_nat_iod")
         s.sql(sql(s"""INSERT OVERWRITE DIRECTORY '$out' USING parquet
                       SELECT n_nationkey, n_name, n_regionkey
@@ -476,7 +473,7 @@ object Source2Queries {
     // (snappy/lz4) at 100 TB.
     Q("src_parquet_codecs",
       (s, d) => {
-        val base = tmp(d, "codecs")
+        val base = ioPath(d, "codecs")
         val codecs = Seq("zstd", "gzip", "snappy", "lz4")
         val src = table(s, d, "nation")
           .select(col("n_nationkey"), col("n_regionkey"))
@@ -564,7 +561,7 @@ object Source2Queries {
     // survives. SHOW PARTITIONS pins the catalog state after each step.
     Q("sql_alter_partitions",
       (s, d) => {
-        val loc = tmp(d, "alterpart")
+        val loc = ioPath(d, "alterpart")
         Registry.rmTree(new java.io.File(loc))
         table(s, d, "orders").filter(col("o_orderstatus") === lit("F"))
           .select(col("o_orderkey")).write.mode(SaveMode.Overwrite)
@@ -603,7 +600,7 @@ object Source2Queries {
     // ErrorIfExists raise travels as a string row.
     Q("src_save_modes",
       (s, d) => {
-        val path = tmp(d, "savemodes")
+        val path = ioPath(d, "savemodes")
         Registry.rmTree(new java.io.File(path))
         val src = table(s, d, "region").select(col("r_regionkey"))
         src.write.mode(SaveMode.Overwrite).parquet(path)
@@ -661,7 +658,7 @@ object Source2Queries {
     // The classic gotcha: '9' < '10' is false as strings.
     Q("src_partition_typed",
       (s, d) => {
-        val path = tmp(d, "part_typed")
+        val path = ioPath(d, "part_typed")
         table(s, d, "orders")
           .select(col("o_orderkey"), col("o_totalprice"),
             pmod(col("o_custkey"), lit(12)).cast("int").as("pmod12"))
@@ -700,14 +697,9 @@ object Source2Queries {
         try w.write("PAR1garbage-not-a-footer".getBytes) finally w.close()
         val raised = scala.util.Try(
           s.read.schema("v BIGINT").parquet(dir).count()).isFailure
-        val prev = s.conf.getOption("spark.sql.files.ignoreCorruptFiles")
-        val survived = try {
-          s.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+        val survived = withConfs(s, Map("spark.sql.files.ignoreCorruptFiles" -> "true")) {
           s.read.schema("v BIGINT").parquet(dir)
             .agg(count(lit(1)), sum(col("v"))).collect()(0)
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.files.ignoreCorruptFiles", p)
-          case None => s.conf.unset("spark.sql.files.ignoreCorruptFiles")
         }
         Seq((if (raised) "raised" else "no_error",
           survived.getLong(0), survived.getLong(1)))
@@ -728,7 +720,7 @@ object Source2Queries {
     // full round-trip are oracled on data.
     Q("src_parquet_bloom",
       (s, d) => {
-        val base = tmp(d, "bloom")
+        val base = ioPath(d, "bloom")
         table(s, d, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
           .coalesce(1).write.mode(SaveMode.Overwrite)

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Engine.table
 import org.apache.spark.sql.{SaveMode, SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
-import Registry.sql
+import Registry.{ioPath, sql, withConfs}
 
 /** Round-12 golden wave — the `ppr_pushdown` family (35 golden files):
   * predicate pushdown into PARTITION pruning, including predicates that
@@ -21,9 +21,6 @@ import Registry.sql
   */
 object Source4Queries {
 
-  private def tmp(d: String, name: String) =
-    s"/tmp/graft_io/${d.replaceAll("[^a-zA-Z0-9]", "_")}/$name"
-
   /** Stage ONCE per source fingerprint (graft.Staging: atomic rename, no
     * mid-overwrite window for a concurrently-held DataFrame to read a
     * path being deleted) and read back the hive-partitioned orders
@@ -31,7 +28,7 @@ object Source4Queries {
   private[queries] def partitionedOrders(s: SparkSession, d: String): DataFrame = {
     val fp = graft.Staging.fingerprint(s"$d/orders.parquet")
     val path = graft.Staging.once(
-      java.nio.file.Paths.get(tmp(d, s"orders_ppr_$fp"))) { t =>
+      java.nio.file.Paths.get(ioPath(d, s"orders_ppr_$fp"))) { t =>
       table(s, d, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode(SaveMode.Overwrite)
@@ -49,10 +46,10 @@ object Source4Queries {
     * time) that the int `o_year` fixture above cannot reach. */
   /** Staged location of the date-partitioned fixture — exposed so tests
     * (PlanSpec's DateType-inference probe) derive the path through the
-    * same mangling as tmp() instead of duplicating the sanitized
+    * same mangling as ioPath() instead of duplicating the sanitized
     * literal. */
   private[graft] def datePartitionedPath(d: String): String =
-    tmp(d, s"orders_pdate_${graft.Staging.fingerprint(s"$d/orders.parquet")}")
+    ioPath(d, s"orders_pdate_${graft.Staging.fingerprint(s"$d/orders.parquet")}")
 
   private[queries] def datePartitionedOrders(s: SparkSession, d: String): DataFrame = {
     val path = graft.Staging.once(
@@ -171,7 +168,7 @@ object Source4Queries {
         val staged = fmts.map { fmt =>
           val fp = graft.Staging.fingerprint(s"$d/orders.parquet")
           val p = graft.Staging.once(
-            java.nio.file.Paths.get(tmp(d, s"dates_${fmt}_$fp"))) { t =>
+            java.nio.file.Paths.get(ioPath(d, s"dates_${fmt}_$fp"))) { t =>
             dates.write.format(fmt).option("header", "true").save(t.toString)
           }
           s.read.format(fmt).option("header", "true").schema("dt DATE")
@@ -209,7 +206,7 @@ object Source4Queries {
                WHEN 2 THEN 'p=q' WHEN 3 THEN 'semi;colon'
                ELSE 'per%cent' END AS pv""")
         val path = graft.Staging.once(
-          java.nio.file.Paths.get(tmp(d, s"esc_$fp"))) { t =>
+          java.nio.file.Paths.get(ioPath(d, s"esc_$fp"))) { t =>
           mapped.write.mode(SaveMode.Overwrite).partitionBy("pv").parquet(t.toString)
         }
         s.read.parquet(path.toString)
@@ -233,7 +230,7 @@ object Source4Queries {
       (s, d) => {
         val fp = graft.Staging.fingerprint(s"$d/customer.parquet")
         val path = graft.Staging.once(
-          java.nio.file.Paths.get(tmp(d, s"ppr2_$fp"))) { t =>
+          java.nio.file.Paths.get(ioPath(d, s"ppr2_$fp"))) { t =>
           table(s, d, "customer")
             .selectExpr("c_custkey AS k",
               "CASE c_custkey % 2 WHEN 0 THEN '1' ELSE '11' END AS pa",
@@ -268,29 +265,19 @@ object Source4Queries {
       (s, d) => {
         val fp = graft.Staging.fingerprint(s"$d/customer.parquet")
         val path = graft.Staging.once(
-          java.nio.file.Paths.get(tmp(d, s"smallfiles_$fp"))) { t =>
+          java.nio.file.Paths.get(ioPath(d, s"smallfiles_$fp"))) { t =>
           table(s, d, "customer").repartition(64)
             .write.mode(SaveMode.Overwrite).parquet(t.toString)
         }
-        val savedCost = s.conf.getOption("spark.sql.files.openCostInBytes")
-        val savedMin = s.conf.getOption("spark.sql.files.minPartitionNum")
         val (nParts, nFiles, census) =
-          try {
-            s.conf.set("spark.sql.files.openCostInBytes", "0")
-            s.conf.set("spark.sql.files.minPartitionNum", "1")
+          withConfs(s, Map("spark.sql.files.openCostInBytes" -> "0",
+              "spark.sql.files.minPartitionNum" -> "1")) {
             val df = s.read.parquet(path.toString)
             (df.rdd.getNumPartitions,
               new java.io.File(path.toString).listFiles()
                 .count(f => f.getName.endsWith(".parquet")),
               df.agg(count(lit(1)).as("n"),
                 expr("CAST(sum(c_custkey) AS BIGINT)").as("ksum")).collect()(0))
-          } finally {
-            def restore(k: String, v: Option[String]): Unit = v match {
-              case Some(x) => s.conf.set(k, x)
-              case None => s.conf.unset(k)
-            }
-            restore("spark.sql.files.openCostInBytes", savedCost)
-            restore("spark.sql.files.minPartitionNum", savedMin)
           }
         val sq = s; import sq.implicits._
         Seq((census.getLong(0), census.getLong(1), nFiles >= 32,

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Engine.table
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
-import Registry.sql
+import Registry.{dropManaged, ioPath, sql}
 
 /** SURVEY §2.1 — sources and sinks: JSON (write + schema-inferred read,
   * JSONRelation/JsonRDD analog), CSV (text-format round-trip), raw text
@@ -22,18 +22,12 @@ import Registry.sql
   */
 object SourceQueries {
 
-  private def tmp(d: String, name: String) =
-    s"/tmp/graft_io/${d.replaceAll("[^a-zA-Z0-9]", "_")}/$name"
-
-  private def dropManaged(s: org.apache.spark.sql.SparkSession, name: String): Unit =
-    Registry.dropManaged(s, name)
-
   val all: Seq[Q] = Seq(
 
     // JSON round-trip with inferred schema (JsonRDD.inferSchema analog).
     Q("src_json_roundtrip",
       (s, d) => {
-        val path = tmp(d, "orders_json")
+        val path = ioPath(d, "orders_json")
         table(s, d, "orders").filter(col("o_totalprice") > 200000.0)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
           .write.mode(SaveMode.Overwrite).json(path)
@@ -54,7 +48,7 @@ object SourceQueries {
     // TYPES as well as values.
     Q("src_json_widening",
       (s, d) => {
-        val path = tmp(d, "json_widening")
+        val path = ioPath(d, "json_widening")
         new java.io.File(path).mkdirs()
         val w = new java.io.PrintWriter(s"$path/data.json")
         try w.print(Seq(
@@ -96,7 +90,7 @@ object SourceQueries {
     // can only be observed by executing.
     Q("src_json_corrupt",
       (s, d) => {
-        val path = tmp(d, "json_corrupt")
+        val path = ioPath(d, "json_corrupt")
         new java.io.File(path).mkdirs()
         val w = new java.io.PrintWriter(s"$path/data.json")
         try w.print(Seq(
@@ -171,7 +165,7 @@ object SourceQueries {
     // flat source table.
     Q("src_nested_pruning",
       (s, d) => {
-        val path = tmp(d, "docs_nested")
+        val path = ioPath(d, "docs_nested")
         table(s, d, "documents")
           .select(col("doc_id"),
             struct(struct(col("lang"), col("n_chars")).as("meta"),
@@ -198,7 +192,7 @@ object SourceQueries {
     // exception as src_json_corrupt).
     Q("src_csv_corrupt",
       (s, d) => {
-        val path = tmp(d, "csv_corrupt")
+        val path = ioPath(d, "csv_corrupt")
         new java.io.File(path).mkdirs()
         val w = new java.io.PrintWriter(s"$path/data.csv")
         try w.print(Seq(
@@ -251,7 +245,7 @@ object SourceQueries {
     // newest built-in format.
     Q("src_xml_roundtrip",
       (s, d) => {
-        val path = tmp(d, "supplier_xml")
+        val path = ioPath(d, "supplier_xml")
         table(s, d, "supplier")
           .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
           .write.mode(SaveMode.Overwrite)
@@ -267,7 +261,7 @@ object SourceQueries {
     // CSV round-trip with header + explicit schema on read.
     Q("src_csv_roundtrip",
       (s, d) => {
-        val path = tmp(d, "nation_csv")
+        val path = ioPath(d, "nation_csv")
         table(s, d, "nation").write.mode(SaveMode.Overwrite)
           .option("header", "true").csv(path)
         s.read.option("header", "true")
@@ -280,7 +274,7 @@ object SourceQueries {
     // Raw text sink + source (textFile/saveAsTextFile analog).
     Q("src_text_roundtrip",
       (s, d) => {
-        val path = tmp(d, "docs_text")
+        val path = ioPath(d, "docs_text")
         table(s, d, "documents").select(concat_ws("\t", col("doc_id"), col("text")))
           .write.mode(SaveMode.Overwrite).text(path)
         s.read.text(path)
@@ -293,7 +287,7 @@ object SourceQueries {
     // filter on the partition column must prune directories, not rows.
     Q("src_parquet_partitioned",
       (s, d) => {
-        val path = tmp(d, "orders_part")
+        val path = ioPath(d, "orders_part")
         table(s, d, "orders")
           .write.mode(SaveMode.Overwrite).partitionBy("o_orderstatus").parquet(path)
         s.read.parquet(path)
@@ -309,7 +303,7 @@ object SourceQueries {
     // two writes with different column subsets, one merged scan.
     Q("src_parquet_merge_schema",
       (s, d) => {
-        val base = tmp(d, "merge_schema")
+        val base = ioPath(d, "merge_schema")
         val r = table(s, d, "region")
         r.select(col("r_regionkey")).write.mode(SaveMode.Overwrite).parquet(s"$base/p=1")
         r.select(col("r_regionkey"), col("r_name")).write.mode(SaveMode.Overwrite).parquet(s"$base/p=2")
@@ -326,7 +320,7 @@ object SourceQueries {
     Q("src_object_file",
       (s, d) => {
         import s.implicits._
-        val path = tmp(d, "obj_rdd")
+        val path = ioPath(d, "obj_rdd")
         val dir = new java.io.File(path)
         if (dir.exists()) Registry.rmTree(dir)
         table(s, d, "supplier")
@@ -355,7 +349,7 @@ object SourceQueries {
     // recomputes name lengths + md5 from the nation table itself.
     Q("src_binary_files",
       (s, d) => {
-        val path = tmp(d, "bin_files")
+        val path = ioPath(d, "bin_files")
         val dir = new java.io.File(path)
         if (dir.exists()) Registry.rmTree(dir)
         dir.mkdirs()
@@ -380,7 +374,7 @@ object SourceQueries {
     Q("src_sequence_file",
       (s, d) => {
         import s.implicits._
-        val path = tmp(d, "seq_rdd")
+        val path = ioPath(d, "seq_rdd")
         val dir = new java.io.File(path)
         if (dir.exists()) Registry.rmTree(dir)
         table(s, d, "nation")
@@ -441,7 +435,7 @@ object SourceQueries {
     // with predicate pushdown into the ORC scan.
     Q("src_orc_roundtrip",
       (s, d) => {
-        val path = tmp(d, "orders_orc")
+        val path = ioPath(d, "orders_orc")
         table(s, d, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
           .write.mode(SaveMode.Overwrite).orc(path)
@@ -569,7 +563,7 @@ object SourceQueries {
         // fixed path: the query starts with a full Overwrite write, so
         // re-runs are idempotent — a pid suffix would leak one partitioned
         // copy of orders per JVM run
-        val path = tmp(d, "orders_dynpart")
+        val path = ioPath(d, "orders_dynpart")
         val base = table(s, d, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
         base.write.mode(SaveMode.Overwrite).partitionBy("o_orderstatus").parquet(path)
@@ -594,7 +588,7 @@ object SourceQueries {
     // writer/reader option surface round-tripped with an explicit schema.
     Q("src_csv_options",
       (s, d) => {
-        val path = tmp(d, "customer_csv_opts")
+        val path = ioPath(d, "customer_csv_opts")
         table(s, d, "customer")
           .select(col("c_custkey"),
             concat(col("c_name"), lit(";addr")).as("c_name"), // force quoting
@@ -651,40 +645,27 @@ object SourceQueries {
     // job eventually needs — inspect (or migrate) checkpointed state
     // WITHOUT replaying the stream. The state rows are the aggregation
     // buffers (count + sum per user_id); the oracle is the same
-    // aggregate computed batch-side. Staging + checkpoint are cleaned
-    // in finally AFTER the state read materializes (collect + re-
-    // parallelize), the one query where the checkpoint must outlive
-    // the streaming query itself.
+    // aggregate computed batch-side. The scratch dirs are deleted AFTER
+    // the state read materializes (collect + re-parallelize), the one
+    // query where the checkpoint must outlive the streaming query itself.
     Q("src_state_store",
-      (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val stamp = System.nanoTime()
-        val srcDir = s"/tmp/graft_stream/statesrc_$stamp"
-        val ckpt = s"${graft.streaming.StreamRunner.ckptRoot(s)}/statesrc-$stamp"
+      (s, d) => graft.streaming.StreamRunner.scratch(s, "statesrc") { sc =>
         graft.Engine.events(s, d).select(col("user_id"), col("event_id"))
-          .coalesce(1).write.mode("overwrite").parquet(srcDir)
-        val schema = s.read.parquet(srcDir).schema
-        try {
-          val q = s.readStream.schema(schema).parquet(srcDir)
-            .groupBy(col("user_id"))
-            .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_ids"))
-            .writeStream.format("memory").queryName(s"statesrc_$stamp")
-            .outputMode("update").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("state-source stream did not finish within 300s")
-          }
-          // batch-read the checkpointed state: key struct = group key,
-          // value struct = the aggregation buffer (count, sum)
-          val state = s.read.format("statestore").load(ckpt)
-            .select(col("key.user_id"), col("value.*"))
-            .toDF("user_id", "n_events", "sum_ids")
-          // materialize BEFORE the checkpoint dir is deleted
-          val rows = state.collect().toSeq
-          s.createDataFrame(s.sparkContext.parallelize(rows, 4), state.schema)
-        } finally Seq(srcDir, ckpt).foreach(p => Registry.rmTree(new java.io.File(p)))
+          .coalesce(1).write.mode("overwrite").parquet(sc.src)
+        val schema = s.read.parquet(sc.src).schema
+        graft.streaming.StreamRunner.run(s.readStream.schema(schema).parquet(sc.src)
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_ids"))
+          .writeStream.format("memory").queryName(sc.id).outputMode("update"),
+          "src_state_store", sc.ckpt)
+        // batch-read the checkpointed state: key struct = group key,
+        // value struct = the aggregation buffer (count, sum)
+        val state = s.read.format("statestore").load(sc.ckpt)
+          .select(col("key.user_id"), col("value.*"))
+          .toDF("user_id", "n_events", "sum_ids")
+        // materialize BEFORE the checkpoint dir is deleted
+        val rows = state.collect().toSeq
+        s.createDataFrame(s.sparkContext.parallelize(rows, 4), state.schema)
       },
       Some(sql("""SELECT user_id, count(*) AS n_events,
                     CAST(sum(event_id) AS BIGINT) AS sum_ids

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Engine.table
 import org.apache.spark.sql.functions._
-import Registry.sql
+import Registry.{sql, withConfs}
 
 /** Round-9 SQL wave 12 — dialect predicates and feature-engineering
   * SQL the earlier waves didn't cross. */
@@ -77,10 +77,9 @@ object Sql12Queries {
         Registry.dropManaged(s, "graft_cbo_orders")
         table(s, d, "orders").write.saveAsTable("graft_cbo_orders")
         s.sql("ANALYZE TABLE graft_cbo_orders COMPUTE STATISTICS FOR COLUMNS o_orderkey")
-        val savedCbo = s.conf.getOption("spark.sql.cbo.enabled")
-        val savedThr = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-        try {
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8k")
+        // joinKind flips cbo.enabled inside the scope; both keys restore
+        withConfs(s, Map("spark.sql.autoBroadcastJoinThreshold" -> "8k",
+            "spark.sql.cbo.enabled" -> "false")) {
           def query = table(s, d, "lineitem")
             .join(s.table("graft_cbo_orders").filter(col("o_orderkey") < 100),
               col("l_orderkey") === col("o_orderkey"))
@@ -97,11 +96,6 @@ object Sql12Queries {
           val r = query.collect()(0)
           Seq((r.getLong(0), r.getDouble(1), off, on))
             .toDF("n", "revenue", "cbo_off_join", "cbo_on_join")
-        } finally {
-          savedCbo.fold(s.conf.unset("spark.sql.cbo.enabled"))(
-            s.conf.set("spark.sql.cbo.enabled", _))
-          savedThr.fold(s.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-            s.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
         }
       },
       Some(sql("""SELECT count(*) AS n, round(sum(l_extendedprice), 2) AS revenue,

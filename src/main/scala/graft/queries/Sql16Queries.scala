@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Engine.table
 import org.apache.spark.sql.functions._
-import Registry.sql
+import Registry.{dropManaged, ioPath, sql}
 
 /** Round-11 SQL wave 16 — the golden `groupby_*` multi-aggregation long
   * tail (reference sql/hive/src/test/resources/golden/, the family the
@@ -27,12 +27,6 @@ import Registry.sql
   *   FILTER'd aggregates combined in one aggregation.
   */
 object Sql16Queries {
-
-  private def dropManaged(s: org.apache.spark.sql.SparkSession, name: String): Unit =
-    Registry.dropManaged(s, name)
-
-  private def tmp(d: String, name: String) =
-    s"/tmp/graft_io/${d.replaceAll("[^a-zA-Z0-9]", "_")}/$name"
 
   val all: Seq[Q] = Seq(
 
@@ -127,7 +121,7 @@ object Sql16Queries {
         table(s, d, "orders")
           .write.format("parquet")
           .bucketBy(8, "o_custkey")
-          .option("path", tmp(d, "bk_agg"))
+          .option("path", ioPath(d, "bk_agg"))
           .mode("overwrite")
           .saveAsTable("graft_bk_agg")
         s.sql(sql("""

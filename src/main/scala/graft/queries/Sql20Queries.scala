@@ -3,7 +3,7 @@ package graft.queries
 import graft.Engine.table
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import Registry.{dropManaged, sql}
+import Registry.{dropManaged, sql, withConfs}
 
 /** Round-13 golden wave 2 — the remaining large uncrossed families:
   *
@@ -435,11 +435,8 @@ object Sql20Queries {
     Q("sql_cbo_join_reorder",
       (s, d) => {
         cboTables(s, d)
-        val savedCbo = s.conf.getOption("spark.sql.cbo.enabled")
-        val savedRe = s.conf.getOption("spark.sql.cbo.joinReorder.enabled")
-        try {
-          s.conf.set("spark.sql.cbo.enabled", "true")
-          s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+        withConfs(s, Map("spark.sql.cbo.enabled" -> "true",
+            "spark.sql.cbo.joinReorder.enabled" -> "true")) {
           // eager: the plan must be optimized (and executed) UNDER the
           // CBO confs, not at the caller's later materialization time
           val sq = s; import sq.implicits._
@@ -450,11 +447,6 @@ object Sql20Queries {
             JOIN graft_cbo_n n ON c.c_nationkey = n.n_nationkey
             GROUP BY n.n_name""")).collect().toSeq
             .map(r => (r.getString(0), r.getLong(1))).toDF("n_name", "cnt")
-        } finally {
-          savedCbo.fold(s.conf.unset("spark.sql.cbo.enabled"))(
-            s.conf.set("spark.sql.cbo.enabled", _))
-          savedRe.fold(s.conf.unset("spark.sql.cbo.joinReorder.enabled"))(
-            s.conf.set("spark.sql.cbo.joinReorder.enabled", _))
         }
       },
       Some(sql("""

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Engine.table
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import Registry.{dropManaged, sql}
+import Registry.{dropManaged, sql, withConfs}
 
 /** Round-13 golden wave 7 — the largest still-uncrossed HiveCompatibility
   * families after wave 6 (reference HiveCompatibilitySuite.scala:246
@@ -280,9 +280,7 @@ object Sql22Queries {
         src.where("c_custkey > 120 AND c_custkey <= 150").write.saveAsTable("graft_sp_b")
         s.sql("ANALYZE TABLE graft_sp_a COMPUTE STATISTICS")
         s.sql("ANALYZE TABLE graft_sp_b COMPUTE STATISTICS")
-        val saved = s.conf.getOption("spark.sql.cbo.enabled")
-        s.conf.set("spark.sql.cbo.enabled", "true")
-        try {
+        withConfs(s, Map("spark.sql.cbo.enabled" -> "true")) {
           def rc(df: org.apache.spark.sql.DataFrame): Long =
             df.queryExecution.optimizedPlan.stats.rowCount
               .map(_.toLong).getOrElse(-1L)
@@ -292,11 +290,6 @@ object Sql22Queries {
           val sq = s; import sq.implicits._
           Seq(("scan", scan), ("union", union), ("limit", limit))
             .toDF("node", "est_rows")
-        } finally {
-          saved match {
-            case Some(v) => s.conf.set("spark.sql.cbo.enabled", v)
-            case None => s.conf.unset("spark.sql.cbo.enabled")
-          }
         }
       },
       Some(sql("""

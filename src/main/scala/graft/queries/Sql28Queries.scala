@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Engine.table
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import Registry.{dropManaged, sql}
+import Registry.{dropManaged, sql, withConfs}
 
 /** Round-14 adversarial validation of the round-13 whiteList closing
   * sweep (COVERAGE.md "Round 13 whiteList closing sweep") — the r13
@@ -35,16 +35,6 @@ import Registry.{dropManaged, sql}
   * pattern as the catalog-probe rows).
   */
 object Sql28Queries {
-
-  /** Run `body` with `confs` set, restoring previous values (or
-    * unsetting) afterwards. */
-  private def withConfs[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
-    val saved = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, prev) =>
-      prev.fold(s.conf.unset(k))(v => s.conf.set(k, v)) }
-  }
 
   /** The execution-strategy variants that must not change answers —
     * the modern restatement of Hive's map-aggr/skew-groupby config

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Engine.table
-import Registry.sql
+import Registry.{dropManaged, sql}
 
 /** Reference-era SQL dialect surface, wave 3.
   *
@@ -22,9 +22,6 @@ import Registry.sql
   *   interact.
   */
 object Sql3Queries {
-
-  private def dropManaged(s: org.apache.spark.sql.SparkSession, name: String): Unit =
-    Registry.dropManaged(s, name)
 
   val all: Seq[Q] = Seq(
 

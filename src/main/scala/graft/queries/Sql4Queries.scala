@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Engine.table
-import Registry.sql
+import Registry.{dropManaged, sql, withConfs}
 
 /** Modern SQL dialect surface, wave 4 — the Spark 4 features a user
   * migrating OFF the reference's 1.3-era dialect gains for free, each
@@ -15,9 +15,6 @@ import Registry.sql
   *  - column DEFAULT values honored by INSERT column lists.
   */
 object Sql4Queries {
-
-  private def dropManaged(s: org.apache.spark.sql.SparkSession, name: String): Unit =
-    Registry.dropManaged(s, name)
 
   val all: Seq[Q] = Seq(
 
@@ -104,23 +101,19 @@ object Sql4Queries {
     Q("sql_scripting_while",
       (s, d) => {
         table(s, d, "orders").createOrReplaceTempView("graft_ord_script")
-        val prev = s.conf.getOption("spark.sql.scripting.enabled")
-        s.conf.set("spark.sql.scripting.enabled", "true")
-        try s.sql(sql("""BEGIN
-                           DECLARE i INT DEFAULT 0;
-                           DECLARE thr DOUBLE DEFAULT 100000.0;
-                           DECLARE acc BIGINT DEFAULT 0;
-                           WHILE i < 3 DO
-                             SET acc = acc + (SELECT count(*) FROM graft_ord_script
-                                              WHERE o_totalprice > thr);
-                             SET thr = thr * 2.0;
-                             SET i = i + 1;
-                           END WHILE;
-                           SELECT acc AS n_above_cum, thr AS final_thr;
-                         END"""))
-        finally prev match {
-          case Some(p) => s.conf.set("spark.sql.scripting.enabled", p)
-          case None => s.conf.unset("spark.sql.scripting.enabled")
+        withConfs(s, Map("spark.sql.scripting.enabled" -> "true")) {
+          s.sql(sql("""BEGIN
+                         DECLARE i INT DEFAULT 0;
+                         DECLARE thr DOUBLE DEFAULT 100000.0;
+                         DECLARE acc BIGINT DEFAULT 0;
+                         WHILE i < 3 DO
+                           SET acc = acc + (SELECT count(*) FROM graft_ord_script
+                                            WHERE o_totalprice > thr);
+                           SET thr = thr * 2.0;
+                           SET i = i + 1;
+                         END WHILE;
+                         SELECT acc AS n_above_cum, thr AS final_thr;
+                       END"""))
         }
       },
       Some(sql("""SELECT CAST(
@@ -137,21 +130,17 @@ object Sql4Queries {
     Q("sql_scripting_for",
       (s, d) => {
         table(s, d, "region").createOrReplaceTempView("graft_region_script")
-        val prev = s.conf.getOption("spark.sql.scripting.enabled")
-        s.conf.set("spark.sql.scripting.enabled", "true")
-        try s.sql(sql("""BEGIN
-                           DECLARE total BIGINT DEFAULT 0;
-                           DECLARE names STRING DEFAULT '';
-                           FOR r AS SELECT r_regionkey AS k, r_name AS nm
-                                    FROM graft_region_script ORDER BY r_regionkey DO
-                             SET total = total + r.k;
-                             SET names = concat(names, '|', r.nm);
-                           END FOR;
-                           SELECT total AS key_sum, names AS name_chain;
-                         END"""))
-        finally prev match {
-          case Some(p) => s.conf.set("spark.sql.scripting.enabled", p)
-          case None => s.conf.unset("spark.sql.scripting.enabled")
+        withConfs(s, Map("spark.sql.scripting.enabled" -> "true")) {
+          s.sql(sql("""BEGIN
+                         DECLARE total BIGINT DEFAULT 0;
+                         DECLARE names STRING DEFAULT '';
+                         FOR r AS SELECT r_regionkey AS k, r_name AS nm
+                                  FROM graft_region_script ORDER BY r_regionkey DO
+                           SET total = total + r.k;
+                           SET names = concat(names, '|', r.nm);
+                         END FOR;
+                         SELECT total AS key_sum, names AS name_chain;
+                       END"""))
         }
       },
       Some(sql("""SELECT CAST(sum(r_regionkey) AS BIGINT) AS key_sum,

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.streaming.StreamRunner
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import Registry.sql
 
 /** Round-11 streaming wave 2 — the State Data Source (Spark 4's
@@ -33,15 +32,8 @@ object Streaming2Queries {
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_events"),
             sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException(s"streaming query '$name' did not finish")
-        }
+        StreamRunner.run(agg.writeStream.format("memory").queryName(name)
+          .outputMode("complete"), name, ckpt)
         s.read.format("statestore").load(ckpt)
           .select(col("key.*"), col("value.*"))
           .toDF("user_id", "n_events", "cents")
@@ -65,15 +57,8 @@ object Streaming2Queries {
         val agg = StreamRunner.eventsStream(s, d)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_events"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException(s"streaming query '$name' did not finish")
-        }
+        StreamRunner.run(agg.writeStream.format("memory").queryName(name)
+          .outputMode("complete"), name, ckpt)
         val feed = s.read.format("statestore")
           .option("readChangeFeed", "true")
           .option("changeStartBatchId", "0")

@@ -5,6 +5,7 @@ import graft.streaming.StreamRunner
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
+import org.apache.spark.sql.types.StructType
 import Registry.sql
 
 /** SURVEY §2.9 — streaming operators, restated on event time (the
@@ -23,16 +24,9 @@ object StreamingQueries {
   /** Run `body` with the RocksDB state store provider set (required by
     * transformWithState — and the disk-backed store large stateful jobs
     * need at scale), restoring the previous session conf afterwards. */
-  private def withRocksDBStateStore[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def withRocksDBStateStore[T](s: SparkSession)(body: => T): T =
+    Registry.withConfs(s, Map("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(body)
 
   /** Spark 4 StatefulProcessor for `stream_transform_with_state`:
     * per-user running (event count, micro-unit value sum) in a single
@@ -572,22 +566,17 @@ object StreamingQueries {
     Q("stream_foreach_batch",
       (s, d) => {
         // unique sink per run: append mode must start from empty
-        val out = s"/tmp/graft_io/${d.replaceAll("[^a-zA-Z0-9]", "_")}/stream_fb_${System.nanoTime()}"
-        val q = StreamRunner.eventsStream(s, d)
-          .select(col("event_type"), col("value"))
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            // idempotent sink: batch-id-named path + overwrite, so a
-            // retried micro-batch replaces its own output instead of
-            // appending a duplicate copy
-            batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"${StreamRunner.ckptRoot(s)}/fb-${System.nanoTime()}")
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException("stream_foreach_batch did not finish within 300s")
+        val out = Registry.ioPath(d, s"stream_fb_${System.nanoTime()}")
+        StreamRunner.scratch(s, "fb") { sc =>
+          StreamRunner.run(StreamRunner.eventsStream(s, d)
+            .select(col("event_type"), col("value"))
+            .writeStream
+            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+              // idempotent sink: batch-id-named path + overwrite, so a
+              // retried micro-batch replaces its own output instead of
+              // appending a duplicate copy
+              batch.write.mode("overwrite").parquet(s"$out/batch=$id")
+            }, "stream_foreach_batch", sc.ckpt)
         }
         s.read.parquet(out)
           .groupBy(col("event_type"))
@@ -741,43 +730,30 @@ object StreamingQueries {
     // offsets and state: the final aggregate equals the batch answer
     // over the full corpus — no loss (missed files) and no duplication
     // (re-read files would double counts). Staging is per-invocation
-    // (nanoTime dir) so EVERY run exercises a real recovery, not a
-    // replay of a warm checkpoint.
+    // (StreamRunner.scratch) so EVERY run exercises a real recovery, not
+    // a replay of a warm checkpoint.
     Q("stream_ckpt_recovery",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val stamp = System.nanoTime()
-        val srcDir = s"/tmp/graft_stream/ckptrec_src_$stamp"
-        val ckpt = s"${StreamRunner.ckptRoot(s)}/ckptrec-$stamp"
         val events = Engine.events(s, d).select(col("user_id"), col("event_id"))
-        events.filter(col("event_id") % 2 === 0)
-          .coalesce(1).write.mode("overwrite").parquet(srcDir)
-        val schema = s.read.parquet(srcDir).schema
-        def runPass(name: String): Unit = {
-          val q = s.readStream.schema(schema).parquet(srcDir)
-            .groupBy(col("user_id"))
-            .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_ids"))
-            .writeStream.format("memory").queryName(name).outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException(s"recovery pass '$name' did not finish within 300s")
-          }
-        }
         // the memory sink holds the complete-mode result in driver
-        // memory once the query terminates, so the per-invocation
-        // staging + checkpoint dirs can go immediately — and in a
-        // finally, so a timed-out or failed pass cannot leak /tmp
-        // state across repeated Verify/Bench runs
-        try {
-          runPass(s"ckptrec_p1_$stamp") // phase 1: half the corpus
+        // memory once the query terminates, so the scratch dirs go as
+        // soon as the second pass ends
+        StreamRunner.scratch(s, "ckptrec") { sc =>
+          events.filter(col("event_id") % 2 === 0)
+            .coalesce(1).write.mode("overwrite").parquet(sc.src)
+          val schema = s.read.parquet(sc.src).schema
+          def runPass(name: String): Unit =
+            StreamRunner.run(s.readStream.schema(schema).parquet(sc.src)
+              .groupBy(col("user_id"))
+              .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_ids"))
+              .writeStream.format("memory").queryName(name).outputMode("complete"),
+              name, sc.ckpt): Unit
+          runPass(s"${sc.id}_p1") // phase 1: half the corpus
           events.filter(col("event_id") % 2 === 1)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          runPass(s"ckptrec_final_$stamp") // restart: resume offsets + state
-        } finally Seq(srcDir, ckpt).foreach(p => Registry.rmTree(new java.io.File(p)))
-        s.table(s"ckptrec_final_$stamp")
+            .coalesce(1).write.mode("append").parquet(sc.src)
+          runPass(s"${sc.id}_final") // restart: resume offsets + state
+          s.table(s"${sc.id}_final")
+        }
       },
       Some(sql("""SELECT user_id, count(*) AS n_events,
                     CAST(sum(event_id) AS BIGINT) AS sum_ids
@@ -792,42 +768,23 @@ object StreamingQueries {
     // in complete mode. The streaming answer must equal the batch
     // truth over the full corpus — the report a continuously-ingesting
     // corpus build reads. Staging is per-invocation and cleaned up
-    // (the stream_ckpt_recovery convention).
+    // (StreamRunner.scratch).
     Q("stream_gopher_gate",
-      (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val stamp = System.nanoTime()
-        val srcDir = s"/tmp/graft_stream/gopher_src_$stamp"
-        val ckpt = s"${StreamRunner.ckptRoot(s)}/gopher-$stamp"
+      (s, d) => StreamRunner.scratch(s, "gopher") { sc =>
         // range partitioning guarantees four NON-EMPTY doc_id-contiguous
         // files (hash of the residue classes collides two of them and
         // leaves one partition empty — verified on this Spark build)
         graft.Engine.table(s, d, "documents")
           .select(col("doc_id"), col("source"), col("text"))
           .repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(srcDir)
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+          .write.mode("overwrite").parquet(sc.src)
+        val stream = StreamRunner.waveStream(s, sc.src, s.read.parquet(sc.src).schema)
         val agg = Pipeline4Queries.gopherSignals(
           stream.select(col("source"), col("text")), Seq("source"))
           .withColumn("gpass", Pipeline4Queries.gopherPass.cast("long"))
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"), sum(col("gpass")).as("n_pass"))
-        // staging + checkpoint removal sits in finally: a timeout or
-        // query failure must not leak per-invocation /tmp dirs across
-        // repeated Verify/Bench runs
-        try {
-          val q = agg.writeStream.format("memory").queryName(s"gopher_$stamp")
-            .outputMode("complete").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("streaming gopher gate did not finish within 300s")
-          }
-        } finally Seq(srcDir, ckpt).foreach(p => Registry.rmTree(new java.io.File(p)))
-        s.table(s"gopher_$stamp")
+        StreamRunner.runToTable(s, agg, sc.id)
       },
       Some(sql(s"""SELECT source, count(*) AS n_docs,
                     CAST(sum(CASE WHEN ${Pipeline4Queries.gopherPassSql}
@@ -850,30 +807,17 @@ object StreamingQueries {
     Q("stream_tws_timers",
       (s, d) => withRocksDBStateStore(s) {
         val sq = s; import sq.implicits._
-        val stamp = System.nanoTime()
-        val srcDir = s"/tmp/graft_stream/twstimer_src_$stamp"
-        new java.io.File(srcDir).mkdirs()
         val batches = Seq(
           Seq(("A", 1L, "2024-03-01 10:00:00"), ("A", 2L, "2024-03-01 10:05:00"),
             ("B", 3L, "2024-03-01 10:00:00")),
           Seq(("C", 4L, "2024-03-01 12:00:00")),
           Seq(("D", 5L, "2024-03-01 14:00:00")),
           Seq(("E", 6L, "2024-03-01 18:00:00")))
-        try {
-          batches.zipWithIndex.foreach { case (rs, i) =>
-            val tmp = s"$srcDir/_tmp$i"
-            rs.toDF("user", "event_id", "ts_s")
-              .select(col("user"), col("event_id"), to_timestamp(col("ts_s")).as("ts"))
-              .coalesce(1).write.mode("overwrite").parquet(tmp)
-            val part = new java.io.File(tmp).listFiles()
-              .find(_.getName.startsWith("part-")).get
-            val dst = new java.io.File(s"$srcDir/batch$i.parquet")
-            java.nio.file.Files.move(part.toPath, dst.toPath)
-            Registry.rmTree(new java.io.File(tmp))
-            dst.setLastModified(1700000000000L + i * 60000): Unit
-          }
-          val ev = s.readStream.schema("user STRING, event_id BIGINT, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", "1").parquet(srcDir)
+        StreamRunner.scratch(s, "twst") { sc =>
+          StreamRunner.stageWaves(sc.src, batches.map(_.toDF("user", "event_id", "ts_s")
+            .select(col("user"), col("event_id"), to_timestamp(col("ts_s")).as("ts"))))
+          val ev = StreamRunner.waveStream(s, sc.src,
+              StructType.fromDDL("user STRING, event_id BIGINT, ts TIMESTAMP"))
             .withWatermark("ts", "30 minutes")
             .select(col("user"), col("event_id"), unix_millis(col("ts")).as("ts_ms"))
             .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong))
@@ -882,10 +826,10 @@ object StreamingQueries {
               org.apache.spark.sql.streaming.TimeMode.EventTime(),
               org.apache.spark.sql.streaming.OutputMode.Append())
             .toDF("user", "n_events", "sum_ids", "last_ts_ms")
-          StreamRunner.runToTable(s, out, s"twst_$stamp", "append")
+          StreamRunner.runToTable(s, out, sc.id, "append")
             .select(col("user"), col("n_events"), col("sum_ids"),
               (col("last_ts_ms") / lit(1000)).cast("long").as("last_ts_s"))
-        } finally Registry.rmTree(new java.io.File(srcDir))
+        }
       },
       Some(sql("""SELECT usr AS user, CAST(n AS BIGINT) AS n_events,
                     CAST(sm AS BIGINT) AS sum_ids,
@@ -916,27 +860,22 @@ object StreamingQueries {
           .write.format("graft.sources.MemTableSource")
           .option("name", "graft_upsert")
           .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
-        val q = StreamRunner.eventsStream(s, d)
-          .select(col("user_id"), col("event_id"))
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.groupBy(col("user_id"))
-              .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_ids"))
-              .createOrReplaceTempView("graft_upsert_batch")
-            batch.sparkSession.sql(sql("""
-              MERGE INTO graftmem.graft_upsert t
-              USING graft_upsert_batch s ON t.user_id = s.user_id
-              WHEN MATCHED THEN UPDATE SET
-                n_events = t.n_events + s.n_events,
-                sum_ids = t.sum_ids + s.sum_ids
-              WHEN NOT MATCHED THEN INSERT *""")): Unit
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"${StreamRunner.ckptRoot(s)}/upsert-${System.nanoTime()}")
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException("stream_merge_upsert did not finish within 300s")
+        StreamRunner.scratch(s, "upsert") { sc =>
+          StreamRunner.run(StreamRunner.eventsStream(s, d)
+            .select(col("user_id"), col("event_id"))
+            .writeStream
+            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+              batch.groupBy(col("user_id"))
+                .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_ids"))
+                .createOrReplaceTempView("graft_upsert_batch")
+              batch.sparkSession.sql(sql("""
+                MERGE INTO graftmem.graft_upsert t
+                USING graft_upsert_batch s ON t.user_id = s.user_id
+                WHEN MATCHED THEN UPDATE SET
+                  n_events = t.n_events + s.n_events,
+                  sum_ids = t.sum_ids + s.sum_ids
+                WHEN NOT MATCHED THEN INSERT *""")): Unit
+            }, "stream_merge_upsert", sc.ckpt)
         }
         s.read.format("graft.sources.MemTableSource")
           .option("name", "graft_upsert").load()
@@ -945,15 +884,6 @@ object StreamingQueries {
                     CAST(sum(event_id) AS BIGINT) AS sum_ids
                   FROM events GROUP BY user_id"""))),
 
-    // LATE-DATA EXCLUSION: the watermark's defining drop contract,
-    // pinned end to end — a row for the 10:00 window arrives in batch 4,
-    // two watermark advances after the window closed (the watermark
-    // incorporates batch 2's 12:10 by then under ANY update-lag
-    // convention), so the tumbling-window aggregate must NOT count it:
-    // the finalized 10:00 window holds n=2, not 3, and no second 10:00
-    // row may appear. The 15:00 tail window stays unfinalized (final
-    // watermark 14:30) and must never emit. Oracle = the finalized
-    // windows as literals.
     // STREAMING TABLE API (DataStreamWriter.toTable): the sink is a
     // CATALOG TABLE — downstream batch queries read it by name with no
     // path plumbing, the lakehouse-shaped streaming topology. AvailableNow
@@ -961,7 +891,6 @@ object StreamingQueries {
     // catalog read-back is the declared result (equals batch truth).
     Q("stream_to_table",
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         Registry.dropManaged(s, "graft_stream_sink")
         // file-backed tables are APPEND-ONLY sinks (complete/update
         // raise STREAMING_OUTPUT_MODE.UNSUPPORTED_DATASOURCE) — the
@@ -969,15 +898,9 @@ object StreamingQueries {
         // on the catalog read-back
         val rows = StreamRunner.eventsStream(s, d)
           .select(col("event_type"), round(col("value") * 100.0).cast("long").as("cents"))
-        val q = rows.writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation",
-            s"${StreamRunner.ckptRoot(s)}/totable-${System.nanoTime()}")
-          .toTable("graft_stream_sink")
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException("stream_to_table did not finish within 300s")
+        StreamRunner.scratch(s, "totable") { sc =>
+          StreamRunner.run(rows.writeStream.outputMode("append"), "stream_to_table",
+            sc.ckpt, table = Some("graft_stream_sink"))
         }
         s.table("graft_stream_sink")
           .groupBy(col("event_type"))
@@ -1011,12 +934,18 @@ object StreamingQueries {
                   HAVING date_trunc('hour', ts) + INTERVAL 2 HOUR
                     <= (SELECT max(ts) FROM events)"""))),
 
+    // LATE-DATA EXCLUSION: the watermark's defining drop contract,
+    // pinned end to end — a row for the 10:00 window arrives in batch 4,
+    // two watermark advances after the window closed (the watermark
+    // incorporates batch 2's 12:10 by then under ANY update-lag
+    // convention), so the tumbling-window aggregate must NOT count it:
+    // the finalized 10:00 window holds n=2, not 3, and no second 10:00
+    // row may appear. The 15:00 tail window stays unfinalized (final
+    // watermark 14:30) and must never emit. Oracle = the finalized
+    // windows as literals.
     Q("stream_late_data",
       (s, d) => {
         val sq = s; import sq.implicits._
-        val stamp = System.nanoTime()
-        val srcDir = s"/tmp/graft_stream/late_src_$stamp"
-        new java.io.File(srcDir).mkdirs()
         val batches = Seq(
           Seq((1L, "2024-03-01 10:05:00"), (2L, "2024-03-01 10:20:00")),
           Seq((3L, "2024-03-01 12:10:00")),
@@ -1025,28 +954,18 @@ object StreamingQueries {
           // lag convention (it incorporates batch 2's 12:10)
           Seq((4L, "2024-03-01 10:40:00"),
             (5L, "2024-03-01 15:00:00")))
-        try {
-          batches.zipWithIndex.foreach { case (rs, i) =>
-            val tmp = s"$srcDir/_tmp$i"
-            rs.toDF("event_id", "ts_s")
-              .select(col("event_id"), to_timestamp(col("ts_s")).as("ts"))
-              .coalesce(1).write.mode("overwrite").parquet(tmp)
-            val part = new java.io.File(tmp).listFiles()
-              .find(_.getName.startsWith("part-")).get
-            val dst = new java.io.File(s"$srcDir/batch$i.parquet")
-            java.nio.file.Files.move(part.toPath, dst.toPath): Unit
-            Registry.rmTree(new java.io.File(tmp))
-            dst.setLastModified(1700000000000L + i * 60000): Unit
-          }
-          val agg = s.readStream.schema("event_id BIGINT, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", "1").parquet(srcDir)
+        StreamRunner.scratch(s, "late") { sc =>
+          StreamRunner.stageWaves(sc.src, batches.map(_.toDF("event_id", "ts_s")
+            .select(col("event_id"), to_timestamp(col("ts_s")).as("ts"))))
+          val agg = StreamRunner.waveStream(s, sc.src,
+              StructType.fromDDL("event_id BIGINT, ts TIMESTAMP"))
             .withWatermark("ts", "30 minutes")
             .groupBy(window(col("ts"), "1 hour"))
             .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_ids"))
             .select(date_format(col("window.start"), "HH:mm").as("win_start"),
               col("n"), col("sum_ids"))
-          StreamRunner.runToTable(s, agg, s"late_$stamp", "append")
-        } finally Registry.rmTree(new java.io.File(srcDir))
+          StreamRunner.runToTable(s, agg, sc.id, "append")
+        }
       },
       Some(sql("""SELECT ws AS win_start, CAST(n AS BIGINT) AS n,
                     CAST(sm AS BIGINT) AS sum_ids
@@ -1094,7 +1013,7 @@ object StreamingQueries {
                                 WHERE o.user_id = e.user_id AND o.event_id % 2 = 1)
                   GROUP BY user_id"""))),
 
-    // ADMISSION CONTROL under Trigger.AvailableNow: maxFilesPerTrigger
+    // ADMISSION CONTROL under an AvailableNow trigger: maxFilesPerTrigger
     // must hold even when the whole backlog is available at start — the
     // 4 staged files must arrive as FOUR micro-batches (ids 0-3), each
     // carrying exactly its file's rows, not one catch-up batch that
@@ -1103,42 +1022,21 @@ object StreamingQueries {
     Q("stream_avail_now_batches",
       (s, _) => {
         val sq = s; import sq.implicits._
-        val stamp = System.nanoTime()
-        val srcDir = s"/tmp/graft_stream/adm_src_$stamp"
-        new java.io.File(srcDir).mkdirs()
-        try {
-          (0 until 4).foreach { i =>
-            val tmp = s"$srcDir/_tmp$i"
-            (0 until (i + 1)).map(j => (i.toLong, (i * 10 + j).toLong))
-              .toDF("file_id", "v")
-              .coalesce(1).write.mode("overwrite").parquet(tmp)
-            val part = new java.io.File(tmp).listFiles()
-              .find(_.getName.startsWith("part-")).get
-            java.nio.file.Files.move(part.toPath,
-              new java.io.File(s"$srcDir/batch$i.parquet").toPath): Unit
-            Registry.rmTree(new java.io.File(tmp))
-            new java.io.File(s"$srcDir/batch$i.parquet")
-              .setLastModified(1700000000000L + i * 60000): Unit
-          }
+        StreamRunner.scratch(s, "adm") { sc =>
+          StreamRunner.stageWaves(sc.src, (0 until 4).map(i =>
+            (0 until (i + 1)).map(j => (i.toLong, (i * 10 + j).toLong)).toDF("file_id", "v")))
           val ledger = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          val q = s.readStream.schema("file_id BIGINT, v BIGINT")
-            .option("maxFilesPerTrigger", "1").parquet(srcDir)
+          StreamRunner.run(StreamRunner.waveStream(s, sc.src,
+              StructType.fromDDL("file_id BIGINT, v BIGINT"))
             .writeStream
             .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
               val agg = batch.agg(count(lit(1)), sum(col("v"))).collect()(0)
               ledger.synchronized {
                 ledger += ((id, agg.getLong(0), agg.getLong(1))): Unit
               }
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", s"${StreamRunner.ckptRoot(s)}/adm-$stamp")
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("admission probe did not finish within 300s")
-          }
+            }, "stream_avail_now_batches", sc.ckpt)
           ledger.toSeq.toDF("batch_id", "n_rows", "sum_v")
-        } finally Registry.rmTree(new java.io.File(srcDir))
+        }
       },
       Some(sql("""SELECT CAST(b AS BIGINT) AS batch_id, CAST(n AS BIGINT) AS n_rows,
                     CAST(sv AS BIGINT) AS sum_v
@@ -1154,43 +1052,23 @@ object StreamingQueries {
     Q("stream_update_mode",
       (s, d) => {
         val sq = s; import sq.implicits._
-        val stamp = System.nanoTime()
-        val srcDir = s"/tmp/graft_stream/updmode_$stamp"
-        val ckpt = s"${StreamRunner.ckptRoot(s)}/updmode_$stamp"
-        new java.io.File(srcDir).mkdirs()
         val batches = Seq(Seq("A", "A", "B"), Seq("A"), Seq("B", "B", "C"))
-        try {
-          batches.zipWithIndex.foreach { case (ks, i) =>
-            val tmp = s"$srcDir/_tmp$i"
-            ks.toDF("k").coalesce(1).write.mode("overwrite").parquet(tmp)
-            val part = new java.io.File(tmp).listFiles()
-              .find(_.getName.startsWith("part-")).get
-            val dst = new java.io.File(s"$srcDir/batch$i.parquet")
-            java.nio.file.Files.move(part.toPath, dst.toPath): Unit
-            Registry.rmTree(new java.io.File(tmp))
-            dst.setLastModified(1700000000000L + i * 60000): Unit
-          }
+        StreamRunner.scratch(s, "updmode") { sc =>
+          StreamRunner.stageWaves(sc.src, batches.map(_.toDF("k")))
           val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-          val agg = s.readStream.schema("k STRING")
-            .option("maxFilesPerTrigger", "1").parquet(srcDir)
+          val agg = StreamRunner.waveStream(s, sc.src,
+              StructType.fromDDL("k STRING"))
             .groupBy(col("k")).agg(count(lit(1)).as("n"))
-          val q = agg.writeStream.outputMode("update")
+          StreamRunner.run(agg.writeStream.outputMode("update")
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
               val rows = b.collect()
               buf.synchronized {
                 rows.foreach(r => buf += ((id, r.getString(0), r.getLong(1))))
               }: Unit
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("stream_update_mode did not finish within 300s")
-          }
+            }, "stream_update_mode", sc.ckpt)
           buf.sortBy(r => (r._1, r._2)).toSeq
             .toDF("batch_id", "k", "n")
-        } finally Seq(srcDir, ckpt).foreach(p => Registry.rmTree(new java.io.File(p)))
+        }
       },
       Some(sql("""SELECT CAST(b AS BIGINT) AS batch_id, k, CAST(n AS BIGINT) AS n
                   FROM (VALUES (0, 'A', 2), (0, 'B', 1), (1, 'A', 3),
@@ -1206,30 +1084,16 @@ object StreamingQueries {
     Q("stream_mgws_timeout",
       (s, d) => {
         val sq = s; import sq.implicits._
-        val stamp = System.nanoTime()
-        val srcDir = s"/tmp/graft_stream/mgwsto_$stamp"
-        val ckpt = s"${StreamRunner.ckptRoot(s)}/mgwsto_$stamp"
-        new java.io.File(srcDir).mkdirs()
         val batches = Seq(
           Seq((1L, "2024-03-01 10:00:00"), (2L, "2024-03-01 10:05:00")),
           Seq((1L, "2024-03-01 12:30:00")),
           Seq((3L, "2024-03-01 14:30:00")))
-        try {
-          batches.zipWithIndex.foreach { case (rs, i) =>
-            val tmp = s"$srcDir/_tmp$i"
-            rs.toDF("user_id", "ts_s")
-              .select(col("user_id"), to_timestamp(col("ts_s")).as("ts"))
-              .coalesce(1).write.mode("overwrite").parquet(tmp)
-            val part = new java.io.File(tmp).listFiles()
-              .find(_.getName.startsWith("part-")).get
-            val dst = new java.io.File(s"$srcDir/batch$i.parquet")
-            java.nio.file.Files.move(part.toPath, dst.toPath): Unit
-            Registry.rmTree(new java.io.File(tmp))
-            dst.setLastModified(1700000000000L + i * 60000): Unit
-          }
+        StreamRunner.scratch(s, "mgwsto") { sc =>
+          StreamRunner.stageWaves(sc.src, batches.map(_.toDF("user_id", "ts_s")
+            .select(col("user_id"), to_timestamp(col("ts_s")).as("ts"))))
           val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          val ev = s.readStream.schema("user_id BIGINT, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", "1").parquet(srcDir)
+          val ev = StreamRunner.waveStream(s, sc.src,
+              StructType.fromDDL("user_id BIGINT, ts TIMESTAMP"))
             .withWatermark("ts", "30 minutes")
             .select(col("user_id"), col("ts"), unix_millis(col("ts")).as("ts_ms"))
             .as(Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.scalaLong))
@@ -1253,23 +1117,16 @@ object StreamingQueries {
                   Iterator.empty
                 }
             }
-          val q = sessions.toDF("user_id", "n_events", "span_min")
+          StreamRunner.run(sessions.toDF("user_id", "n_events", "span_min")
             .writeStream.outputMode("update")
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
               val rows = b.collect()
               buf.synchronized {
                 rows.foreach(r => buf += ((r.getLong(0), r.getLong(1), r.getLong(2))))
               }: Unit
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("stream_mgws_timeout did not finish within 300s")
-          }
+            }, "stream_mgws_timeout", sc.ckpt)
           buf.sortBy(_._1).toSeq.toDF("user_id", "n_events", "span_min")
-        } finally Seq(srcDir, ckpt).foreach(p => Registry.rmTree(new java.io.File(p)))
+        }
       },
       Some(sql("""SELECT CAST(u AS BIGINT) AS user_id, CAST(n AS BIGINT) AS n_events,
                     CAST(sp AS BIGINT) AS span_min

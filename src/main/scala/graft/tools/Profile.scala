@@ -36,8 +36,9 @@ object Profile {
     val t0 = System.nanoTime()
     q(spark, sfDir).write.format("noop").mode("overwrite").save()
     val total = (System.nanoTime() - t0) / 1e9
+    // deliver the last stage events before the listener goes
+    org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
-    Thread.sleep(1000)
     // a noop WRITE plans its own QueryExecution, leaving the written
     // DataFrame's adaptive plan unexecuted — equiJoinRows executes THIS
     // df's QueryExecution, so its plan is final and its metrics fill

@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.{EagerContract, WindowContract}
-import org.apache.spark.GraftTestShim
+import org.apache.spark.sql.GraftShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.BeforeAndAfterAll
@@ -120,12 +120,12 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
       s"eagerByDesign names not in the registry (dead entries): ${dead.toSeq.sorted.mkString(", ")}")
     def fired(n: String, pass: Int) = firedGroups.contains(group(n, pass))
     declareUnrecorded(names)
-    GraftTestShim.drainListenerBus(sc)
+    GraftShim.drainListenerBus(sc)
     // pass 2 (mismatches only): one-time effects self-heal under a
     // settled re-declaration
     val mismatched = names.filter(n => fired(n, 1) != declared(n)).toSet
     mismatched.foreach(n => try declare(n, pass = 2): Unit catch { case _: Throwable => () })
-    GraftTestShim.drainListenerBus(sc)
+    GraftShim.drainListenerBus(sc)
     val finalFired = names.map(n => n -> fired(n, if (mismatched(n)) 2 else 1)).toMap
     val undeclaredEager = names.filter(n => finalFired(n) && !declared(n))
     val deadEager = names.filter(n => !finalFired(n) && declared(n))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.SkewGuard
-import org.apache.spark.GraftTestShim
+import org.apache.spark.sql.GraftShim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The hot-bucket guard must drop degenerate LSH buckets (the 100 TB
@@ -130,12 +130,12 @@ class SkewGuardSpec extends AnyFunSuite {
     try {
       names.foreach(n => SparkEntry.queries(n)(spark, TestSpark.Sf)) // declare only
       // settle the async status bus, then prove nothing ran in the group
-      GraftTestShim.drainListenerBus(sc)
+      GraftShim.drainListenerBus(sc)
       assert(sc.statusTracker.getJobIdsForGroup("graft-lazy-check").isEmpty,
         "query declaration fired a driver-side job")
       // sanity: the detection plumbing does see jobs from this thread
       SparkEntry.queries("ml_chi2_cells")(spark, TestSpark.Sf).count()
-      GraftTestShim.drainListenerBus(sc)
+      GraftShim.drainListenerBus(sc)
       assert(sc.statusTracker.getJobIdsForGroup("graft-lazy-check").nonEmpty,
         "job-group probe is broken — the assertion above proved nothing")
     } finally sc.clearJobGroup()
